@@ -80,14 +80,8 @@ object Bench {
     val quick = sys.env.get("SPARK_GRAFT_QUICK").contains("1")
 
     // Warmup: run everything once (exercises codegen + file listing).
-    // r12: the warmup is now also TIMED per query — it serves as the
-    // ambient-spike anchor for the end-of-suite retry below. Warmup
-    // seconds are never reported; they only gate retries.
-    val warmSec = scala.collection.mutable.Map[String, Double]()
-    if (!quick) queries.foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { run(fn); warmSec(name) = (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => () }
+    if (!quick) queries.foreach { case (_, fn) =>
+      try run(fn) catch { case _: Throwable => () }
     }
 
     // Steady-state seconds: best of two timed runs (local runs share the
@@ -103,7 +97,7 @@ object Bench {
         -1.0
       }
     }
-    val results0: Seq[(String, QueryProfile)] = queries.map { case (name, fn) =>
+    val results: Seq[(String, QueryProfile)] = queries.map { case (name, fn) =>
       GraftListenerBusAccess.drain(spark.sparkContext)
       listener.resetPeak()
       val before = listener.snapshot()
@@ -120,31 +114,6 @@ object Bench {
         afterFirst._1 - before._1, afterFirst._2 - before._2,
         afterFirst._3 - before._3, afterFirst._4)
     }
-
-    // r12 HARNESS ADDITION (additions-only; disclosed in
-    // OPTIMIZATION_r12.md): ambient load spikes on a shared box can sit
-    // across BOTH timed runs of a contiguous query window — r11's driver
-    // sample read q163–q167 at 7–19× their walls on byte-identical plans
-    // because warmup + both timed runs fit inside one multi-minute spike.
-    // When a query's best timed second exceeds 3× its own warmup reading
-    // (same plan, same bytes, earlier window) it gets ONE extra run at
-    // the END of the suite — a different time window — and the min is
-    // kept. Methodology (warmup pass + best-of-timed-runs, noop sink,
-    // env contract, one-line JSON) is unchanged; per-query profiles
-    // still come from the first timed run.
-    val retriedNames = scala.collection.mutable.ListBuffer[String]()
-    val results: Seq[(String, QueryProfile)] =
-      if (quick) results0
-      else results0.map { case (name, p) =>
-        val spiky = p.sec >= 0 &&
-          warmSec.get(name).exists(w => p.sec > math.max(3.0 * w, w + 1.0))
-        if (!spiky) name -> p
-        else {
-          retriedNames += name
-          val t = timedRun(name, queries.toMap.apply(name))
-          if (t >= 0 && t < p.sec) name -> p.copy(sec = t) else name -> p
-        }
-      }
 
     // The round driver keeps only the last ~2000 chars of stdout and
     // json-parses what it finds there — a full 160-entry map overflows
@@ -182,19 +151,14 @@ object Bench {
     val failed = results.count(_._2.sec < 0)
     val total = round3(results.map(_._2.sec).filter(_ >= 0).sum)
     val failedField = if (failed > 0) s""","failed":$failed""" else ""
-    // additions-only: absent when no end-of-suite retry fired
-    val retriedField = if (retriedNames.isEmpty) ""
-      else s""","retried":${retriedNames.size}"""
-    val retriedFileField = if (retriedNames.isEmpty) ""
-      else retriedNames.map("\"" + _ + "\"").mkString(""","retried":[""", ",", "]")
     // stdout: complete-and-parsable beats complete-but-truncated; the
     // `queries` map here is the slowest-N slice (every heavy family the
     // band adjudication reads), with the slice size declared so a reader
     // can't mistake it for the whole registry.
     val stdoutJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$secOfCompact,"queries_shown":${shown.size},"queries_total":${results.size}$failedField$retriedField,"sf":"$sfDir","full":"target/bench.json"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$secOfCompact,"queries_shown":${shown.size},"queries_total":${results.size}$failedField,"sf":"$sfDir","full":"target/bench.json"}"""
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$secOf,"profile":$profileOf$failedField$retriedFileField,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$secOf,"profile":$profileOf$failedField,"sf":"$sfDir"}"""
     val out = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
     if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)

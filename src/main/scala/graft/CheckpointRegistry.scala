@@ -3,63 +3,74 @@ package graft
 import java.lang.ref.WeakReference
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Deterministic lifecycle for the engine's `localCheckpoint` blocks
-  * (r12 optimization round, guide §5).
+/** The engine's one checkpoint lifecycle: every checkpoint that cuts
+  * lineage (the dedup CC ladder, the BPE vocab loop, shared signature and
+  * label tables, the streaming dedup sinks) is made by [[local]] and
+  * released by [[release]] or [[releaseAll]]. No other code calls
+  * `localCheckpoint` or `Dataset.checkpoint` (CheckpointRegistrySpec
+  * guards this).
   *
-  * Every batch query path that materializes a shared intermediate routes
-  * its checkpoint through [[local]], which records a WEAK reference to
-  * the backing RDD. A runner (Bench / Verify) calls [[releaseAll]] after
-  * each query's terminal action, so the MEMORY_AND_DISK blocks are
-  * dropped the moment the query is done instead of pinning executor
-  * storage memory until a driver GC lets ContextCleaner collect them —
-  * measured across the 179-query suite the GC-driven lifecycle stacked
-  * live blocks across queries (the bench logs were full of
-  * "RDD … was locally checkpointed … cannot be recomputed after
-  * unpersisting" WARNs at collection time, and storage memory crept
-  * between queries).
+  * MAKING. [[local]] checkpoints locally (executor block storage) unless
+  * the SparkContext has a checkpoint directory — set by Spark's own
+  * `spark.checkpoint.dir` or by `SparkContext.setCheckpointDir` — in which
+  * case it checkpoints reliably to that directory. Both are a LogicalRDD
+  * barrier with the same plan; a reliable checkpoint is recomputable after
+  * executor loss, a local one fails the job instead. Each checkpoint's
+  * backing RDD is tracked by a WEAK reference, so an entry never delays
+  * normal GC.
   *
-  * References are weak, so an un-released entry never delays normal GC;
-  * a runner that never calls [[releaseAll]] (interactive use, tests)
-  * behaves exactly as before. Unpersist is idempotent — paths that also
-  * release explicitly (the CC loop, the streaming sink) are unaffected.
+  * RELEASING. `Dataset.unpersist` is a no-op on a checkpointed frame (it
+  * only uncaches via the CacheManager, while the checkpoint persists its
+  * RDD directly). [[release]] instead unpersists every checkpoint RDD in a
+  * frame's analyzed plan — the frame's own checkpoint, or every one its
+  * lineage reads — and deletes a reliable checkpoint's files, which Spark
+  * keeps otherwise (`spark.cleaner.referenceTracking.cleanCheckpoints` is
+  * off by default). Iterative operators release each superseded round;
+  * sinks release their frames after the last write. [[releaseAll]] does
+  * the same for every tracked checkpoint still alive; runners (Bench,
+  * Verify, the benchmark harness) call it after each query's action, so
+  * the blocks and files go the moment the query is done instead of
+  * pinning storage until a driver GC. A runner that never calls it
+  * (interactive use) behaves as plain Spark. A checkpoint whose RDD was
+  * garbage-collected before release keeps its reliable files unless
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`.
   *
-  * 100 TB POSTURE (documented tradeoff, conf-switchable): a local
-  * checkpoint truncates lineage, so an executor loss after
-  * materialization fails the job instead of recomputing. That is the
-  * right local/bench default (no cluster store exists, and the blocks
-  * are per-invocation scratch). On a cluster with executor churn set
-  * `spark.graft.checkpoint.reliable=true` + `spark.graft.checkpoint.dir`
-  * and [[local]] routes the same materializations through
-  * `Dataset.checkpoint` to reliable storage — identical plans (both are
-  * a LogicalRDD barrier), recomputable after loss.
+  * ONE ACTION PER QUERY. Releasing is only safe after the LAST action on
+  * every frame that reads the checkpoint: a local checkpoint cannot be
+  * recomputed once its blocks are gone, so a second action on a frame
+  * built over a released checkpoint fails. A runner that calls
+  * [[releaseAll]] runs exactly one action per built query.
   */
 object CheckpointRegistry {
 
   private val tracked = new ConcurrentLinkedQueue[WeakReference[RDD[_]]]()
 
-  /** Checkpoint `df` (local by default; reliable when
-    * `spark.graft.checkpoint.reliable=true`) and track the backing RDD
-    * for release at the end of the consuming query. */
-  def local(df: DataFrame, eager: Boolean): DataFrame = {
-    val conf = df.sparkSession.conf
+  /** Checkpoint `ds` (reliably when the SparkContext has a checkpoint
+    * directory, locally otherwise) and track the backing RDD for release
+    * at the end of the consuming query. */
+  def local[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
     val out =
-      if (conf.getOption("spark.graft.checkpoint.reliable").contains("true")) {
-        conf.getOption("spark.graft.checkpoint.dir")
-          .foreach(df.sparkSession.sparkContext.setCheckpointDir)
-        df.checkpoint(eager)
-      } else df.localCheckpoint(eager)
-    out.queryExecution.analyzed match {
-      case lr: LogicalRDD => tracked.add(new WeakReference(lr.rdd))
-      case _              => ()
-    }
+      if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(eager)
+      else ds.localCheckpoint(eager)
+    checkpointRdds(out).foreach(rdd => tracked.add(new WeakReference(rdd)))
     out
   }
 
-  /** Unpersist every tracked checkpoint RDD still alive. Called by the
+  /** Release every checkpoint RDD in `ds`'s analyzed plan. Only safe
+    * after the last action on `ds` and on every other frame reading those
+    * checkpoints. Returns the number of checkpoint RDDs released. */
+  def release(ds: Dataset[_], blocking: Boolean = false): Int = {
+    val rdds = checkpointRdds(ds)
+    rdds.foreach(releaseRdd(_, blocking))
+    rdds.size
+  }
+
+  /** Release every tracked checkpoint RDD still alive. Called by the
     * runners after a query's terminal action; safe at any time for
     * per-invocation checkpoints (each query run builds fresh ones). */
   def releaseAll(blocking: Boolean = false): Int = {
@@ -68,11 +79,24 @@ object CheckpointRegistry {
     while (ref != null) {
       val rdd = ref.get()
       if (rdd != null) {
-        rdd.unpersist(blocking)
+        releaseRdd(rdd, blocking)
         released += 1
       }
       ref = tracked.poll()
     }
     released
+  }
+
+  private def checkpointRdds(ds: Dataset[_]): Seq[RDD[_]] =
+    ds.queryExecution.analyzed.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }.distinct
+
+  /** Unpersist is idempotent, and deleting an already-deleted reliable
+    * checkpoint is a no-op, so releasing twice is harmless. */
+  private def releaseRdd(rdd: RDD[_], blocking: Boolean): Unit = {
+    rdd.unpersist(blocking)
+    rdd.getCheckpointFile.foreach { file =>
+      val path = new Path(file)
+      path.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(path, true)
+    }
   }
 }

@@ -7,15 +7,24 @@ import graft.queries._
 object SparkEntry {
 
   /** All registered query families (SURVEY.md §2). */
-  private def allDefs: Map[String, QueryDef] =
-    RelationalQueries.defs ++ EtlQueries.defs ++ EventQueries.defs ++
-      LlmQueries.defs ++ DeriveQueries.defs ++ UpdateQueries.defs ++
-      TaggingQueries.defs ++ GeoQueries.defs ++ EsQueries.defs ++
-      CurationQueries.defs ++ ToolsQueries.defs ++ PipelineQueries.defs ++
-      PreprocessQueries.defs ++ SamplingQueries.defs ++ CleaningQueries.defs ++
-      CorpusQueries.defs ++ PlacesQueries.defs ++ MediaQueries.defs ++
-      ProfileQueries.defs ++ AnalyticsQueries.defs ++ ConnectorQueries.defs ++
-      BenchmarkQueries.defs
+  private def allDefs: Map[String, QueryDef] = mergeUnique(Seq(
+    RelationalQueries.defs, EtlQueries.defs, EventQueries.defs,
+    LlmQueries.defs, DeriveQueries.defs, UpdateQueries.defs,
+    TaggingQueries.defs, GeoQueries.defs, EsQueries.defs,
+    CurationQueries.defs, ToolsQueries.defs, PipelineQueries.defs,
+    PreprocessQueries.defs, SamplingQueries.defs, CleaningQueries.defs,
+    CorpusQueries.defs, PlacesQueries.defs, MediaQueries.defs,
+    ProfileQueries.defs, AnalyticsQueries.defs, ConnectorQueries.defs,
+    BenchmarkQueries.defs))
+
+  /** Union of query families. A name registered by two families throws:
+    * `++` would silently keep only one of the two queries. */
+  private[graft] def mergeUnique(families: Seq[Map[String, QueryDef]]): Map[String, QueryDef] =
+    families.foldLeft(Map.empty[String, QueryDef]) { (acc, family) =>
+      val dups = family.keySet.intersect(acc.keySet)
+      require(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+      acc ++ family
+    }
 
   /** Flagship on /root/testdata/sf0.001 (driver smoke-checks rows>0): the
     * full card-derivation pipeline — the reference's to_dp.py flow

@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * divisions, and the concat allocates per piece. Here the two scaled
   * integers are computed ONCE and the 12 chars append into a single
   * StringBuilder — one tight loop in the stage's generated Java
-  * (measured ~4x on the kernel alone; graft.tools.ProfOlc).
+  * (measured ~4x on the kernel alone; see the r6 OLC datapoint in
+  * BASELINE.md).
   * Digit-for-digit the same integer arithmetic, so the DuckDB oracle
   * ([[graft.operators.Olc.Sql]]) is unchanged.
   *

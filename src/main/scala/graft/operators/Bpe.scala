@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * aggregation — word frequencies are sufficient statistics for every
   * round), and each round runs over the VOCABULARY: a bigram explode +
   * one argmax (a 1-row driver collect, the round's convergence artifact)
-  * + a per-word merge rewrite, localCheckpointed so round r+1 starts from
+  * + a per-word merge rewrite, checkpointed so round r+1 starts from
   * materialized symbols instead of r chained rewrites. Driver state is
   * O(rounds); per-round cluster work is vocab-sized, independent of
   * corpus size — the property that makes tokenizer training affordable
@@ -57,7 +57,7 @@ object Bpe {
       .select(col("tok"), col("f").cast("long"))
       .as[(String, Long)]
       .map { case (tok, f) => Vocab(tok.map(_.toString), f) }
-      .localCheckpoint()
+      .transform(graft.CheckpointRegistry.local(_, true))
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var r = 1
@@ -76,17 +76,16 @@ object Bpe {
         val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getAs[Long]("n"))
         merges += Merge(r, a, b, n)
         val prev = vocab
-        vocab = vocab.map(v => Vocab(mergePair(v.syms, a, b), v.n)).localCheckpoint()
-        // RDD-level release: Dataset.unpersist is a NO-OP on checkpointed
-        // frames (it only uncaches via the CacheManager)
-        org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(prev)
+        vocab = vocab.map(v => Vocab(mergePair(v.syms, a, b), v.n))
+          .transform(graft.CheckpointRegistry.local(_, true))
+        graft.CheckpointRegistry.release(prev)
         r += 1
       }
     }
     val out = merges.toSeq.toDF("round", "left", "right", "n")
       .select(col("round").cast("int"), col("left"), col("right"), col("n").cast("long"))
     // the final round's checkpoint would otherwise leak until driver GC
-    org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(vocab)
+    graft.CheckpointRegistry.release(vocab)
     out
   }
 

@@ -811,8 +811,8 @@ object Dedup {
     * (to_dp.py:237 `merge_duplicate_branches`'s branch_mapping); a
     * driver-side union-find cannot hold 100 TB of ids, so the iteration
     * is the distributed equivalent. Lineage is cut per round with an
-    * eager localCheckpoint (a cluster deployment would use
-    * checkpoint() on reliable storage).
+    * eager [[graft.CheckpointRegistry]] checkpoint (reliable when the
+    * SparkContext has a checkpoint directory).
     *
     * The fixpoint is unique (min label of each connected component), so
     * results are engine-independent — a recursive-CTE oracle converges to
@@ -948,9 +948,9 @@ object Dedup {
       }
     // the loop/driver-solve is done with the contracted edge list; only
     // labels0 and the final `labels` stay live — the RETURNED frame's
-    // (lazy) lineage reads both, so those checkpoints are the caller's
-    // to consume and fall to GC after its action
-    org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(cEdges)
+    // (lazy) lineage reads both, so the caller releases those after its
+    // action (CheckpointRegistry.releaseAll, or release on the frame)
+    graft.CheckpointRegistry.release(cEdges)
     // Compose: each id's final label is its contracted node's component
     // label; ids whose contracted node lost every edge to self-loops are
     // already final at their init label.
@@ -1050,15 +1050,14 @@ object Dedup {
       // null metric = zero rows in the contracted graph (all-clique input
       // contracts away entirely) — converged
       changed = Option(obs.get("changed")).exists(_.asInstanceOf[Long] > 0)
-      // release the superseded round's checkpoint blocks at the RDD
-      // level (Dataset.unpersist is a no-op on checkpoints): `next` is
-      // eagerly materialized, so nothing reads `labels` again — without
+      // release the superseded round's checkpoint: `next` is eagerly
+      // materialized, so nothing reads `labels` again — without
       // this, a long-lived caller (the streaming cluster-maintenance
       // sink runs this loop EVERY micro-batch) accumulates one
       // label-table checkpoint per round per batch until a driver GC
       val prev = labels
       labels = next
-      org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(prev)
+      graft.CheckpointRegistry.release(prev)
       rounds += 1
       // POINTER-JUMP every 4th round: label <- label(label). One-hop BSP
       // alone moves min labels a single edge per round, so a chain-shaped
@@ -1076,7 +1075,7 @@ object Dedup {
           .select(col("id"), coalesce(col("ll"), col("label")).as("label"))
           .repartition(nPart, col("id"))
           .transform(graft.CheckpointRegistry.local(_, true))
-        org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(beforeJump)
+        graft.CheckpointRegistry.release(beforeJump)
       }
     }
     if (changed)

@@ -59,7 +59,7 @@ object Olc {
 
   /** The original composed-function form — kept as the independent
     * realization the property tests pin the native kernel against (and
-    * the ProfOlc baseline). */
+    * the baseline of the ~4x kernel measurement in BASELINE.md). */
   def encode11Composed(lat: Column, lng: Column): Column = {
     val (latVal, lngVal) = scaled(lat, lng)
     // Pair section: drop the 5 grid digits (lat ÷ 5^5, lng ÷ 4^5), then

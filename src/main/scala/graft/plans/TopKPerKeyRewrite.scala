@@ -47,9 +47,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 object TopKPerKeyRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** Kill switch, read per-invocation so tests and the profiling mains
-    * ([[graft.tools.ProfTopK]] measures the NAIVE window encoding as its
-    * baseline) can pin the un-rewritten plan. */
+  /** Kill switch, read per-invocation so tests and profiling runs can
+    * pin the un-rewritten plan (the NAIVE window encoding, the baseline
+    * of the TopKPerKey measurements in BASELINE.md). */
   val EnabledKey = "spark.graft.topk.rewrite"
 
   /** Rewrites only for k ≤ this: the exec node holds one k-row heap per

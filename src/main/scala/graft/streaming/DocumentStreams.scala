@@ -229,7 +229,7 @@ object DocumentStreams {
       // when the last action over them has run; without the deep release
       // a long-lived stream accumulates two label-table checkpoints per
       // micro-batch until a driver GC (the passage-sink ADVICE shape)
-      org.apache.spark.sql.graftbridge.DatasetBridge.unpersistLineageCheckpoints(labels)
+      graft.CheckpointRegistry.release(labels)
   }
 
   /** foreachBatch CORPUS-BUILD sink — the streaming flagship closing the
@@ -461,16 +461,14 @@ object DocumentStreams {
           p.select(col("h")).withColumn("in_prior", lit(true)), Seq("h"), "left")
         .withColumn("in_prior", coalesce(col("in_prior"), lit(false)))
       case None => firsts.withColumn("in_prior", lit(false))
-    }).localCheckpoint(false)
+    }).transform(graft.CheckpointRegistry.local(_, false))
     // flagged feeds both the marking and the store append — materialize
     // once (the corpusBuildSink cache posture; checkpoint also cuts the
-    // store-join lineage out of both consumers), and release the blocks
-    // once both consumers have written: localCheckpoint blocks otherwise
-    // live until a driver GC runs ContextCleaner, accumulating across
-    // micro-batches — and Dataset.unpersist does NOT release them (it
-    // only uncaches via the CacheManager; the checkpoint persists the
-    // RDD directly), so the release goes through the RDD-level bridge
-    val flagged = Dedup.joinPerHash(wins, perHash, "cnt").localCheckpoint(true)
+    // store-join lineage out of both consumers), and release it once both
+    // consumers have written: checkpoint blocks otherwise live until a
+    // driver GC runs ContextCleaner, accumulating across micro-batches
+    val flagged = Dedup.joinPerHash(wins, perHash, "cnt")
+      .transform(graft.CheckpointRegistry.local(_, true))
     try {
       val marked = flagged.filter(
           col("in_prior") || struct(col("id"), col("pos")) =!= col("first"))
@@ -486,8 +484,8 @@ object DocumentStreams {
       Seq(freshMax.get).toDF("max_id").coalesce(1)
         .write.mode("overwrite").parquet(s"$maxRoot/batch=$batchId")
     } finally {
-      org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(flagged)
-      org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(perHash)
+      graft.CheckpointRegistry.release(flagged)
+      graft.CheckpointRegistry.release(perHash)
     }
   }
 

@@ -14,36 +14,4 @@ object DatasetBridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   def logicalPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
-
-  /** Release the storage blocks behind a `localCheckpoint()`ed frame.
-    * `Dataset.unpersist` is a NO-OP there: it only uncaches via the
-    * CacheManager, while localCheckpoint persists the underlying RDD
-    * directly (`RDD.localCheckpoint()`), so its MEMORY_AND_DISK blocks
-    * live until a driver GC lets ContextCleaner collect the RDD — a
-    * long-running foreachBatch sink accumulates them across
-    * micro-batches. The checkpointed Dataset's analyzed plan is a
-    * LogicalRDD wrapping that RDD; unpersist it at the RDD level.
-    * Returns true when a checkpoint RDD was found and released. */
-  def unpersistCheckpoint(df: org.apache.spark.sql.Dataset[_],
-                          blocking: Boolean = false): Boolean =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking); true
-      case _ => false
-    }
-
-  /** Release EVERY checkpoint buried anywhere in a frame's lineage —
-    * for a sink that just ran its terminal action over a composed frame
-    * (e.g. connectedComponents' output reads two label checkpoints the
-    * operator itself cannot release because the caller consumes them
-    * lazily). Only safe AFTER the last action on `df`; returns the
-    * number of checkpoint RDDs released. */
-  def unpersistLineageCheckpoints(df: org.apache.spark.sql.Dataset[_],
-                                  blocking: Boolean = false): Int = {
-    val rdds = df.queryExecution.analyzed.collectWithSubqueries {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    rdds.distinct.foreach(_.unpersist(blocking))
-    rdds.distinct.size
-  }
 }

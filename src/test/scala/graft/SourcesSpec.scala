@@ -93,24 +93,6 @@ class SourcesSpec extends SpecBase {
     assert(!new java.io.File(s"$target/_GRAFT_STAGED_COMPLETE").exists())
   }
 
-  test("unpersistCheckpoint releases localCheckpoint blocks (Dataset.unpersist does not)") {
-    import org.apache.spark.sql.graftbridge.DatasetBridge
-    val df = spark.range(1000).toDF("v").localCheckpoint(true)
-    val lr = df.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    val id = lr.rdd.id
-    assert(spark.sparkContext.getPersistentRDDs.contains(id),
-      "a localCheckpoint must persist its RDD")
-    // the trap the streaming sinks hit: Dataset.unpersist only uncaches
-    // via the CacheManager and leaves the checkpoint blocks alive
-    df.unpersist(true)
-    assert(spark.sparkContext.getPersistentRDDs.contains(id),
-      "Dataset.unpersist must be the documented no-op on checkpoints")
-    assert(DatasetBridge.unpersistCheckpoint(df, blocking = true))
-    assert(!spark.sparkContext.getPersistentRDDs.contains(id),
-      "the bridge must release the checkpoint's storage blocks")
-  }
-
   test("csv round-trip and json-lines round-trip") {
     val df = Tables.nation(spark, SfDir)
     val csvPath = tmp("csv")
