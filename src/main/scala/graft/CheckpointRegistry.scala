@@ -22,7 +22,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * barrier with the same plan; a reliable checkpoint is recomputable after
   * executor loss, a local one fails the job instead. Each checkpoint's
   * backing RDD is tracked by a WEAK reference, so an entry never delays
-  * normal GC.
+  * normal GC. [[release]] drops the entries it releases and any whose RDD
+  * was collected; [[releaseAll]] drains them all.
   *
   * RELEASING. `Dataset.unpersist` is a no-op on a checkpointed frame (it
   * only uncaches via the CacheManager, while the checkpoint persists its
@@ -67,6 +68,13 @@ object CheckpointRegistry {
   def release(ds: Dataset[_], blocking: Boolean = false): Int = {
     val rdds = checkpointRdds(ds)
     rdds.foreach(releaseRdd(_, blocking))
+    // drop the released entries and any garbage-collected ones, so a
+    // caller that never runs releaseAll (a long-lived streaming sink)
+    // does not keep one dead reference per checkpoint it made
+    tracked.removeIf { ref =>
+      val rdd = ref.get()
+      rdd == null || rdds.exists(_ eq rdd)
+    }
     rdds.size
   }
 
@@ -86,6 +94,9 @@ object CheckpointRegistry {
     }
     released
   }
+
+  /** Number of tracked checkpoint references, live or cleared. */
+  private[graft] def trackedCount: Int = tracked.size
 
   private def checkpointRdds(ds: Dataset[_]): Seq[RDD[_]] =
     ds.queryExecution.analyzed.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }.distinct

@@ -588,10 +588,12 @@ object Dedup {
   }
 
   /** Pointer-edge composition: previous labels enter as (label → id)
-    * edges, so CC's first contraction collapses every old component to
-    * its label and the iterative work is proportional to the NEW links
-    * (see [[incrementalMinhashLabels]] for the monotone-arrival contract
-    * that makes the result label-for-label equal to a full recompute). */
+    * edges, so every old component enters CC as a star on its label. On
+    * CC's distributed path the first contraction collapses those stars
+    * and the iterative work is proportional to the NEW links; edges that
+    * fit the driver budget are union-found directly (see
+    * [[incrementalMinhashLabels]] for the monotone-arrival contract that
+    * makes the result label-for-label equal to a full recompute). */
   def incrementalCompose(ids: DataFrame, linksNew: DataFrame,
                          labelsOld: DataFrame): DataFrame = {
     val pointer = labelsOld
@@ -798,26 +800,6 @@ object Dedup {
       .filter(col("hamming") <= maxDist)
   }
 
-  /** Cluster assignment over verified near-dup pairs: min-label
-    * propagation (BSP connected components). Every id starts as its own
-    * label; each round every node adopts the smallest label among itself
-    * and its neighbors, until a fixpoint — the standard iterate-until-
-    * converged CC that scales as O(diameter) shuffles (near-dup graphs
-    * are clique-ish, so 2-4 rounds in practice). This is the step a real
-    * dedup pipeline runs AFTER pair discovery (q23/q24/q25): the keep-one
-    * decision needs the transitive cluster, not just pairwise links.
-    *
-    * The reference resolves duplicate groups with in-memory dicts
-    * (to_dp.py:237 `merge_duplicate_branches`'s branch_mapping); a
-    * driver-side union-find cannot hold 100 TB of ids, so the iteration
-    * is the distributed equivalent. Lineage is cut per round with an
-    * eager [[graft.CheckpointRegistry]] checkpoint (reliable when the
-    * SparkContext has a checkpoint directory).
-    *
-    * The fixpoint is unique (min label of each connected component), so
-    * results are engine-independent — a recursive-CTE oracle converges to
-    * the same assignment. Returns (id, cluster).
-    */
   /** Attach per-cluster member counts to a label frame — the lesson-49
     * form: `count(*) OVER (PARTITION BY cluster)` puts a mega cluster's
     * ENTIRE membership into one window task's sort, and the mega cluster
@@ -834,41 +816,123 @@ object Dedup {
     labels.join(counts, Seq(clusterCol))
   }
 
+  /** Cluster assignment over verified near-dup pairs: every id gets the
+    * smallest id of its connected component. This is the step a real
+    * dedup pipeline runs AFTER pair discovery (q23/q24/q25): the keep-one
+    * decision needs the transitive cluster, not just pairwise links. The
+    * fixpoint (component min) is unique, so results are engine-independent
+    * — a recursive-CTE oracle converges to the same assignment. Returns
+    * (id, label).
+    *
+    * Precondition: every link endpoint (`id_a`, `id_b`) is an id in
+    * `ids`. A link with a null endpoint is ignored.
+    *
+    * The solve is size-gated. The reference resolves duplicate groups in
+    * driver dicts (to_dp.py:237 `merge_duplicate_branches`); graft does
+    * the same whenever the problem fits a bounded driver budget:
+    *  1. The links are checkpointed once, eagerly, and counted in flight.
+    *     If the count fits the budget, the links are collected and
+    *     union-found on the driver: no further Spark job runs before the
+    *     caller's action.
+    *  2. Otherwise the links are CONTRACTED through first-hop labels
+    *     (near-duplicate clusters are near-cliques, so most edge mass
+    *     collapses to self-loops) and the residue is counted in flight. A
+    *     residue that fits the budget is union-found on the driver; a
+    *     larger one runs the distributed BSP min-label loop, so a
+    *     pathological chain graph at 100 TB still converges.
+    * `spark.graft.cc.maxDriverResidueEdges` (default 1e6) is that budget,
+    * in DIRECTED edges at both gates: a link counts twice, a residue edge
+    * is counted in both directions, and one row per undirected edge is
+    * collected. So no driver collect exceeds half the budget (5e5 rows,
+    * ≈16 MB of boxed longs at the default).
+    *
+    * Lineage is cut with [[graft.CheckpointRegistry]] checkpoints
+    * (reliable when the SparkContext has a checkpoint directory). The
+    * returned frame may read some of them, so the caller releases it after
+    * its action (`CheckpointRegistry.releaseAll`, or `release` on it).
+    */
   def connectedComponents(ids: DataFrame, links: DataFrame): DataFrame =
     connectedComponents(ids, links, jumpEvery = 4)
 
   def connectedComponents(ids: DataFrame, links: DataFrame, jumpEvery: Int): DataFrame = {
+    val idType = ids.schema("id").dataType
+    val driverOrd: Option[Ordering[Any]] = idType match {
+      case org.apache.spark.sql.types.LongType =>
+        Some(Ordering.Long.on[Any](_.asInstanceOf[Long]))
+      case org.apache.spark.sql.types.IntegerType =>
+        Some(Ordering.Int.on[Any](_.asInstanceOf[Int]))
+      case org.apache.spark.sql.types.StringType =>
+        Some(Ordering.String.on[Any](_.asInstanceOf[String]))
+      case _ => None
+    }
+    val maxDriverEdges = ids.sparkSession.conf
+      .getOption("spark.graft.cc.maxDriverResidueEdges").map(_.toLong)
+      .getOrElse(1000000L)
+    // The one scan of the link frame, which is often an uncached,
+    // expensive discovery join (q66 feeds jaccardPairs straight in): every
+    // later step reads this checkpoint, never the links' lineage. The
+    // count rides the checkpoint job as an in-flight metric, so the gate
+    // costs no extra action. Endpoints take the id type, so both gates
+    // solve over one key type and one ordering.
+    val linkObs = org.apache.spark.sql.Observation(
+      s"graft_cc_links_${ccObsId.incrementAndGet()}")
+    val linkCk = links
+      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"))
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
+      .observe(linkObs, count(lit(1)).as("n"))
+      .transform(graft.CheckpointRegistry.local(_, true))
+    if (driverOrd.isDefined && 2 * observedCount(linkObs) <= maxDriverEdges) {
+      val labels = unionFindOnDriver(linkCk, idType, driverOrd.get)
+      graft.CheckpointRegistry.release(linkCk)
+      // ids with no link keep their own id
+      ids.select(col("id"))
+        .join(labels, Seq("id"), "left")
+        .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+    } else {
+      contractAndSolve(ids, linkCk, idType, driverOrd, maxDriverEdges, jumpEvery)
+    }
+  }
+
+  /** The value of an in-flight `count` metric; null means the observed
+    * job saw no rows. */
+  private def observedCount(obs: org.apache.spark.sql.Observation): Long =
+    Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+
+  /** CC's distributed path for link lists above the driver budget:
+    * contract the links through first-hop labels, then solve the residue
+    * on the driver (when it fits the budget) or with the BSP loop. */
+  private def contractAndSolve(ids: DataFrame, linkCk: DataFrame,
+                               idType: org.apache.spark.sql.types.DataType,
+                               driverOrd: Option[Ordering[Any]], maxDriverEdges: Long,
+                               jumpEvery: Int): DataFrame = {
     // Size the loop's layout to the LABEL table, not the session default:
     // labels are one row per id (tiny next to the edge list), and each
     // round runs several jobs — oversized partition counts turn the loop
     // into scheduler overhead. At corpus scale nPart grows with the id
     // count; locally it keeps rounds at a handful of tasks.
     val nPart = math.max(2, ids.sparkSession.sparkContext.defaultParallelism / 4)
-    // Explode-flip, not union-of-selects: a union references `links` twice,
-    // and when the link frame is an UNCACHED expensive discovery join (q66
-    // feeds jaccardPairs straight in) the whole upstream lineage runs once
-    // per reference inside this cache materialization. One scan, two rows.
-    val edges = links
+    // Both directions of every link, read straight off the link
+    // checkpoint: no cache or repartition of its own. The checkpoint
+    // already cuts the upstream lineage, so the two reads below (first
+    // hop, contraction) each re-explode stored blocks, and the link list
+    // is held once, not twice. The first-hop min aggregates before its
+    // shuffle; the contraction joins shuffle by u and then v either way.
+    val edges = linkCk
       .select(explode(array(
         struct(col("id_a").as("u"), col("id_b").as("v")),
         struct(col("id_b").as("u"), col("id_a").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .repartition(nPart, col("v"))
-      .cache()
     // Smart init = the first BSP round for free: every node starts from
     // least(own id, min over ALL its neighbors) — identical to one
     // min-label round (id_a < id_b in the pair list, so the min over both
     // directions equals the min over incoming id_a once least() is
-    // applied). Derived from `edges`, NOT the raw link frame: upstream
-    // pair discovery (an expensive blocked self-join) must hit the cache,
-    // not re-run its lineage.
+    // applied).
     val firstHop = edges.groupBy(col("v").as("id")).agg(min(col("u")).as("nmin"))
     // r12 (§2.6 — one fewer global barrier): the init-label checkpoint is
     // LAZY, so its blocks materialize inside the cEdges checkpoint job
     // that consumes it (lu/lv below) instead of costing a separate
     // blocking driver action; the final compose then reads the stored
-    // blocks. One CC call = 2 blocking actions (cEdges + residue solve),
-    // down from 3, across a 9-query family.
+    // blocks.
     val labels0 = ids.select(col("id"))
       .join(firstHop, Seq("id"), "left")
       .select(col("id"), least(col("id"), coalesce(col("nmin"), col("id"))).as("label"))
@@ -887,10 +951,7 @@ object Dedup {
     val lu = labels0.select(col("id").as("u"), col("label").as("lu"))
     val lv = labels0.select(col("id").as("v"), col("label").as("lv"))
     // the residue count rides the checkpoint materialization as an
-    // in-flight metric (r11 — the BSP loop's observe trick applied to the
-    // gate): a separate cEdges.count() was one more blocking driver action
-    // per CC call, and this operator runs once per query in a 9-query
-    // family
+    // in-flight metric, like the link count
     val resObs = org.apache.spark.sql.Observation(
       s"graft_cc_residue_${ccObsId.incrementAndGet()}")
     val cEdges = edges.join(lu, "u").join(lv, "v")
@@ -900,38 +961,9 @@ object Dedup {
       .repartition(nPart, col("v"))
       .observe(resObs, count(lit(1)).as("n"))
       .transform(graft.CheckpointRegistry.local(_, true))
-    edges.unpersist()
-    // r11 OPTIMIZATION (guide §1.2 "the distributed algorithm" + §2.6
-    // barriers): the contraction collapses near-clique duplicate mass to
-    // self-loops, so the RESIDUE is the thin inter-clique chain structure
-    // — measured at sf0.1 it is a few hundred edges while the BSP loop
-    // still ran 9 checkpointed rounds (~2.5-3 s of sequential tiny jobs;
-    // pointer-jump cadence 1 vs 4 barely moved it, because a single
-    // label(label) composition shortens paths by one hop, not half).
-    // When the residue fits a bounded driver budget, finish it with an
-    // in-memory union-find instead: the fixpoint (min id per component)
-    // is identical, the collect is gated by an EXACT count of the already
-    // materialized checkpoint, and the BSP loop remains the fallback for
-    // residues above the bound — at 100 TB a pathological chain graph
-    // still converges distributed. This is the standard hybrid finishing
-    // move: rounds (global barriers) drop to zero whenever contraction
-    // has done its job, which is also the common case on real corpora.
-    val maxDriverResidue = ids.sparkSession.conf
-      .getOption("spark.graft.cc.maxDriverResidueEdges").map(_.toLong)
-      .getOrElse(1000000L)
-    val idType = cEdges.schema("u").dataType
-    val driverOrd: Option[Ordering[Any]] = idType match {
-      case org.apache.spark.sql.types.LongType =>
-        Some(Ordering.Long.on[Any](_.asInstanceOf[Long]))
-      case org.apache.spark.sql.types.IntegerType =>
-        Some(Ordering.Int.on[Any](_.asInstanceOf[Int]))
-      case org.apache.spark.sql.types.StringType =>
-        Some(Ordering.String.on[Any](_.asInstanceOf[String]))
-      case _ => None
-    }
-    // counts BOTH directions of each undirected residue edge; measured
-    // during the checkpoint job above, zero extra actions
-    val nResidue = Option(resObs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+    graft.CheckpointRegistry.release(linkCk)
+    // counts BOTH directions of each undirected residue edge
+    val nResidue = observedCount(resObs)
     val labels: DataFrame =
       if (nResidue == 0L) {
         // all edge mass contracted to self-loops — nothing to solve; the
@@ -941,8 +973,9 @@ object Dedup {
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("id", idType),
             org.apache.spark.sql.types.StructField("label", idType))))
-      } else if (driverOrd.isDefined && nResidue <= maxDriverResidue) {
-        solveResidueOnDriver(cEdges, idType, driverOrd.get, nResidue)
+      } else if (driverOrd.isDefined && nResidue <= maxDriverEdges) {
+        // one direction suffices for union-find; halves the collected rows
+        unionFindOnDriver(cEdges.filter(col("u") < col("v")), idType, driverOrd.get)
       } else {
         solveResidueBsp(cEdges, nPart, jumpEvery)
       }
@@ -960,17 +993,17 @@ object Dedup {
       .select(col("id"), coalesce(col("clabel"), col("label")).as("label"))
   }
 
-  /** Bounded in-memory union-find over the contracted residue — exact
-    * same fixpoint as the BSP loop (component-min labels), zero further
-    * Spark rounds. The caller gates the collect on an exact edge count
-    * (`spark.graft.cc.maxDriverResidueEdges`, default 1e6 ≈ 16 MB of
-    * boxed longs), so this is a BOUNDED driver step with a distributed
-    * fallback, not an unbounded collect. */
-  private def solveResidueOnDriver(cEdges: DataFrame,
-                                   idType: org.apache.spark.sql.types.DataType,
-                                   ord: Ordering[Any], nResidue: Long): DataFrame = {
-    // one direction suffices for union-find; halves the collected rows
-    val rows = cEdges.filter(col("u") < col("v")).collect()
+  /** Bounded in-memory union-find over a two-column edge list (either
+    * direction, duplicates allowed) — the same fixpoint as the BSP loop
+    * (component-min labels), zero further Spark rounds. Returns (id,
+    * label) for every node on an edge. Both callers gate the collect on
+    * an exact count against `spark.graft.cc.maxDriverResidueEdges`
+    * (at most 5e5 rows at the default), so this is a BOUNDED driver
+    * step with a distributed fallback, not an unbounded collect. */
+  private def unionFindOnDriver(edges: DataFrame,
+                                idType: org.apache.spark.sql.types.DataType,
+                                ord: Ordering[Any]): DataFrame = {
+    val rows = edges.collect()
     val parent = new java.util.HashMap[Any, Any](rows.length * 2)
     def find(x0: Any): Any = {
       var x = x0
@@ -991,12 +1024,12 @@ object Dedup {
         if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
       }
     }
-    logger.info(s"[graft.cc] residue solved on driver: $nResidue directed edges, " +
+    logger.info(s"[graft.cc] union-find on driver: ${rows.length} edges, " +
       s"${parent.size()} nodes")
     val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size())
     val it = parent.keySet().iterator()
     while (it.hasNext) { val k = it.next(); out.add(org.apache.spark.sql.Row(k, find(k))) }
-    cEdges.sparkSession.createDataFrame(out,
+    edges.sparkSession.createDataFrame(out,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", idType),
         org.apache.spark.sql.types.StructField("label", idType))))

@@ -488,9 +488,9 @@ object CorpusQueries {
       // recompute (star links over old ids → CC) and the incremental
       // new-endpoint link discovery (banding + jaccard verify over the
       // full signature table) share no dependency until the final
-      // pointer-edge CC — but both are EAGER internally (CC rounds,
-      // checkpoint materializations), so run sequentially they serialize
-      // ~50 small jobs. A background thread materializes the new links
+      // pointer-edge CC — but both are EAGER internally (checkpoint
+      // materializations, CC's link checkpoint), so run sequentially they
+      // serialize their jobs. A background thread materializes the new links
       // while the main thread computes labelsOld; FIFO scheduling
       // back-fills the old chain's stragglers with link-verify tasks.
       val linksNewF = java.util.concurrent.CompletableFuture.supplyAsync { () =>

@@ -44,6 +44,15 @@ class CheckpointRegistrySpec extends SpecBase {
     assert(!ids.exists(persisted), "both checkpoints in the lineage must be released")
   }
 
+  test("release drops its registry entries, so a caller that never runs releaseAll leaks none") {
+    CheckpointRegistry.releaseAll(blocking = true)
+    for (i <- 1 to 50) {
+      val df = CheckpointRegistry.local(spark.range(10).toDF("v"), eager = true)
+      assert(CheckpointRegistry.release(df) == 1, s"cycle $i")
+    }
+    assert(CheckpointRegistry.trackedCount == 0)
+  }
+
   test("one action per query: a second action after releaseAll fails, never returns rows") {
     val q = CheckpointRegistry.local(spark.range(1000).toDF("v"), eager = true)
       .filter($"v" % 7 === 0)
@@ -73,12 +82,37 @@ class CheckpointRegistrySpec extends SpecBase {
     val tmp = Files.createTempDirectory("graft_ckpt")
     sc.setCheckpointDir(tmp.toString)
     try {
-      // the driver-side residue solve, then the distributed BSP loop
-      for (maxDriverResidue <- Seq("1000000", "0")) {
+      // The fixture has 15 links (30 directed edges); contraction leaves
+      // a residue of 8 directed edges. So 1000000 union-finds the links on
+      // the driver, 8 contracts and solves the residue on the driver, and
+      // 0 contracts and runs the distributed BSP loop.
+      for (maxDriverResidue <- Seq("1000000", "8", "0")) {
         spark.conf.set("spark.graft.cc.maxDriverResidueEdges", maxDriverResidue)
-        val cc = Dedup.connectedComponents(ids, links)
-        assert(labels(cc) == expected, s"maxDriverResidueEdges=$maxDriverResidue")
-        assert(rddDirs(tmp).nonEmpty, "reliable checkpoints must write under the checkpoint dir")
+        if (maxDriverResidue == "1000000") {
+          // the driver path writes its link checkpoint reliably and
+          // deletes it before CC returns: watch the checkpoint dir for it
+          // (the create event is queued by the OS watch, inotify on Linux,
+          // so the dir's short life does not hide it)
+          val ckDir = Using.resource(Files.list(tmp))(_.iterator().asScala.toList) match {
+            case List(dir) => dir
+            case other => fail(s"expected one checkpoint dir under $tmp: $other")
+          }
+          Using.resource(ckDir.getFileSystem.newWatchService()) { watcher =>
+            ckDir.register(watcher, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+            val cc = Dedup.connectedComponents(ids, links)
+            assert(rddDirs(tmp).isEmpty,
+              s"the link checkpoint must be released inside CC: ${rddDirs(tmp)}")
+            val key = watcher.poll(10, java.util.concurrent.TimeUnit.SECONDS)
+            assert(key != null && key.pollEvents().asScala.exists(
+              _.context().toString.startsWith("rdd-")),
+              "the link checkpoint must be written under the checkpoint dir")
+            assert(labels(cc) == expected, s"maxDriverResidueEdges=$maxDriverResidue")
+          }
+        } else {
+          val cc = Dedup.connectedComponents(ids, links)
+          assert(rddDirs(tmp).nonEmpty, "reliable checkpoints must write under the checkpoint dir")
+          assert(labels(cc) == expected, s"maxDriverResidueEdges=$maxDriverResidue")
+        }
         CheckpointRegistry.releaseAll(blocking = true)
         assert(rddDirs(tmp).isEmpty, s"release left checkpoint files: ${rddDirs(tmp)}")
       }

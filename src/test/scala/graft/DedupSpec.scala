@@ -181,13 +181,17 @@ class DedupSpec extends SpecBase {
     // would blow any fixed cap and, pre-fix, silently returned wrong
     // labels while logging 'converged'. The periodic pointer-jump makes
     // the round count logarithmic; non-convergence now throws.
+    // Bound 0 keeps the links off the driver union-find so the BSP loop
+    // (and its pointer jump) is what converges.
     val n = 512L
     val ids = spark.range(1, n + 1).toDF("id")
     val chain = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(ids, chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (1L to n).map(i => i -> 1L).toMap,
-      s"mislabeled: ${got.filter(_._2 != 1L).take(5)}")
+    for (bound <- Seq(None, Some("0"))) withCcDriverBound(bound) {
+      val got = Dedup.connectedComponents(ids, chain)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == (1L to n).map(i => i -> 1L).toMap,
+        s"bound $bound mislabeled: ${got.filter(_._2 != 1L).take(5)}")
+    }
   }
 
   test("connectedComponents degenerate inputs: no links, self-ish links, one big chain") {
@@ -214,6 +218,19 @@ class DedupSpec extends SpecBase {
     assert(two(1L) == 1L && two(2L) == 1L && two(3L) == 1L)
     assert(two(7L) == 7L && two(8L) == 7L && two(9L) == 7L)
     assert(two(5L) == 5L)
+    // null endpoints are ignored, on the driver union-find and on the
+    // distributed path alike: (-1,null) and (null,1) link nothing. Read
+    // as a value (a Long ordering reads null as 0), a null would join
+    // the -2 and 1 components through it.
+    val signedIds = spark.range(-3, 4).toDF("id")
+    val withNulls = Seq[(java.lang.Long, java.lang.Long)](
+      (-2L, -1L), (-1L, null), (null, 1L), (1L, 2L)).toDF("id_a", "id_b")
+    for (bound <- Seq(None, Some("0"))) withCcDriverBound(bound) {
+      val got = Dedup.connectedComponents(signedIds, withNulls)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(-3L -> -3L, -2L -> -2L, -1L -> -2L, 0L -> 0L,
+        1L -> 1L, 2L -> 1L, 3L -> 3L), s"bound $bound: $got")
+    }
   }
 
   test("dedup composition (q67): CC over LSH star links == CC over all-pairs links at matched thresholds") {
@@ -222,8 +239,12 @@ class DedupSpec extends SpecBase {
     // component-min fixpoint, so partition equality === label equality.
     // The star path is the linear-work 100 TB composition; all-pairs is
     // the oracle-only gate (quadratic inside duplicate clusters).
+    // Both CC solves run: the driver union-find of the raw links (default
+    // bound) and the distributed contraction (0). This fixture contracts
+    // to an empty residue; the residue solves are pinned by the 512-node
+    // path here and the reliable-mode test in CheckpointRegistrySpec.
     val ids = docs.select($"doc_id".as("id"))
-    for (th <- Seq(0.7, 0.9)) {
+    for (bound <- Seq(None, Some("0")); th <- Seq(0.7, 0.9)) withCcDriverBound(bound) {
       val star = Dedup.minhashDedupLinks(docs, "doc_id", "text", threshold = th)
         .select($"id_a", $"id_b")
       val all = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = th)
@@ -236,7 +257,8 @@ class DedupSpec extends SpecBase {
         .join(Dedup.connectedComponents(ids, all).withColumnRenamed("label", "l_all"), "id")
         .filter($"l_star" =!= $"l_all")
       assert(mismatched.isEmpty,
-        s"th=$th: star-link clusters diverge from all-pairs clusters: ${mismatched.head(3).mkString(", ")}")
+        s"bound $bound, th=$th: star-link clusters diverge from all-pairs clusters: " +
+          mismatched.head(3).mkString(", "))
     }
   }
 
@@ -260,13 +282,13 @@ class DedupSpec extends SpecBase {
           count(lit(1)).as("n_members"))
         .select($"cluster", $"r.id".as("keep_id"), $"n_members")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    for (th <- Seq(0.7, 0.9)) {
+    for (bound <- Seq(None, Some("0")); th <- Seq(0.7, 0.9)) withCcDriverBound(bound) {
       val star = reps(Dedup.minhashDedupLinks(docs, "doc_id", "text", threshold = th)
         .select($"id_a", $"id_b"))
       val all = reps(Dedup.minhashNearDups(docs, "doc_id", "text", threshold = th)
         .select($"id_a", $"id_b"))
       assert(star == all,
-        s"th=$th: star-only ${(star -- all).take(3)}, all-only ${(all -- star).take(3)}")
+        s"bound $bound, th=$th: star-only ${(star -- all).take(3)}, all-only ${(all -- star).take(3)}")
       assert(star.exists(_._3 > 1), s"th=$th: expected at least one multi-member cluster")
     }
   }
@@ -275,7 +297,7 @@ class DedupSpec extends SpecBase {
     val all = docs.select($"doc_id", $"text")
     val cutoff = all.agg((floor(max($"doc_id") * 3L / 4L) + 1L).cast("long")).head().getLong(0)
     val oldDocs = all.filter($"doc_id" < cutoff)
-    for (th <- Seq(0.7, 0.9)) {
+    for (bound <- Seq(None, Some("0")); th <- Seq(0.7, 0.9)) withCcDriverBound(bound) {
       val labelsOld = Dedup.connectedComponents(
         oldDocs.select($"doc_id".as("id")),
         Dedup.minhashDedupLinks(oldDocs, "doc_id", "text", threshold = th)
@@ -289,7 +311,7 @@ class DedupSpec extends SpecBase {
           .select($"id_a", $"id_b"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(inc == full,
-        s"th=$th: inc-only ${(inc -- full).take(3)}, full-only ${(full -- inc).take(3)}")
+        s"bound $bound, th=$th: inc-only ${(inc -- full).take(3)}, full-only ${(full -- inc).take(3)}")
       // the batch genuinely merges across the boundary somewhere, or the
       // test proves nothing
       val mergedAcross = full.exists { case (id, label) => id >= cutoff && label < cutoff }

@@ -11,6 +11,16 @@ abstract class SpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SpecBase.sharedSpark
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Run `body` with `spark.graft.cc.maxDriverResidueEdges` set to
+    * `bound` (None = the default). At the default, a test-sized link list
+    * takes CC's driver union-find; `Some("0")` sends it through the
+    * distributed contraction instead. */
+  protected def withCcDriverBound(bound: Option[String])(body: => Unit): Unit = {
+    val key = "spark.graft.cc.maxDriverResidueEdges"
+    bound.foreach(spark.conf.set(key, _))
+    try body finally spark.conf.unset(key)
+  }
 }
 
 object SpecBase {

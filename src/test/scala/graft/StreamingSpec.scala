@@ -446,36 +446,40 @@ class StreamingSpec extends SpecBase {
           r.getAs[String]("lang"), r.getAs[String]("source"),
           new Timestamp(1700000000000L + i * 1000L))
       }
-    val outDir = java.nio.file.Files.createTempDirectory("clusters").toString
+    // the sink's CC calls and the full recompute run on the driver
+    // union-find (default bound) and on the distributed contraction (0)
+    for (bound <- Seq(None, Some("0"))) withCcDriverBound(bound) {
+      val outDir = java.nio.file.Files.createTempDirectory("clusters").toString
 
-    val stream = MemoryStream[Doc]
-    val query = stream.toDF().writeStream
-      .foreachBatch(DocumentStreams.clusterMaintenanceSink(outDir) _)
-      .start()
-    try {
-      // consecutive-id chunks: the monotone-arrival contract
-      docs.grouped((docs.length + 2) / 3).foreach { chunk =>
-        stream.addData(chunk.toSeq)
+      val stream = MemoryStream[Doc]
+      val query = stream.toDF().writeStream
+        .foreachBatch(DocumentStreams.clusterMaintenanceSink(outDir) _)
+        .start()
+      try {
+        // consecutive-id chunks: the monotone-arrival contract
+        docs.grouped((docs.length + 2) / 3).foreach { chunk =>
+          stream.addData(chunk.toSeq)
+          query.processAllAvailable()
+        }
+        def liveLabels() = spark.read
+          .parquet(s"${graft.streaming.EventStreams.currentSnapshotDir(outDir).get}/labels")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val streamed = liveLabels()
+        val all = Tables.documents(spark, SfDir).select($"doc_id", $"text")
+        val full = Dedup.connectedComponents(
+          all.select($"doc_id".as("id")),
+          Dedup.minhashDedupLinks(all, "doc_id", "text", threshold = 0.9)
+            .select($"id_a", $"id_b"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(streamed == full,
+          s"bound $bound: stream-only ${(streamed -- full).take(3)}, full-only ${(full -- streamed).take(3)}")
+
+        // redelivery of an already-clustered chunk republishes identically
+        stream.addData(docs.takeRight(docs.length / 3).toSeq)
         query.processAllAvailable()
-      }
-      def liveLabels() = spark.read
-        .parquet(s"${graft.streaming.EventStreams.currentSnapshotDir(outDir).get}/labels")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val streamed = liveLabels()
-      val all = Tables.documents(spark, SfDir).select($"doc_id", $"text")
-      val full = Dedup.connectedComponents(
-        all.select($"doc_id".as("id")),
-        Dedup.minhashDedupLinks(all, "doc_id", "text", threshold = 0.9)
-          .select($"id_a", $"id_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamed == full,
-        s"stream-only ${(streamed -- full).take(3)}, full-only ${(full -- streamed).take(3)}")
-
-      // redelivery of an already-clustered chunk republishes identically
-      stream.addData(docs.takeRight(docs.length / 3).toSeq)
-      query.processAllAvailable()
-      assert(liveLabels() == full, "replayed rows must be idempotent")
-    } finally query.stop()
+        assert(liveLabels() == full, s"bound $bound: replayed rows must be idempotent")
+      } finally query.stop()
+    }
   }
 
   test("incremental passage-dedup sink: cumulative reports equal batch q166; replay idempotent") {
@@ -695,57 +699,62 @@ class StreamingSpec extends SpecBase {
       .select(explode(array_distinct(
         Dedup.shingles(graft.functions.F.tokens($"text"), 8))).as("sh"))
       .distinct().cache()
-    val buildDir = java.nio.file.Files.createTempDirectory("pipe_build").toString
-    val clusterDir = java.nio.file.Files.createTempDirectory("pipe_clusters").toString
+    // the sink's CC calls and the full recompute run on the driver
+    // union-find (default bound) and on the distributed contraction (0)
+    for (bound <- Seq(None, Some("0"))) withCcDriverBound(bound) {
+      val buildDir = java.nio.file.Files.createTempDirectory("pipe_build").toString
+      val clusterDir = java.nio.file.Files.createTempDirectory("pipe_clusters").toString
 
-    val stream = MemoryStream[Doc]
-    // one continuous pipeline: each curated micro-batch feeds BOTH the
-    // corpus-build sink (decontaminate -> pack -> shard + manifest) and
-    // the live cluster-maintenance sink — the two downstream artifacts a
-    // training pipeline keeps beside each other
-    val query = DocumentStreams.curateStream(stream.toDF(), carryText = true)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        DocumentStreams.corpusBuildSink(evalShingles, buildDir)(b.toDF(), id)
-        DocumentStreams.clusterMaintenanceSink(clusterDir)(b.toDF(), id)
-      }
-      .start()
-    try {
-      docs.grouped((docs.length + 2) / 3).foreach { chunk =>
-        stream.addData(chunk.toSeq)
-        query.processAllAvailable()
-      }
-      // artifact 1: the packed corpus equals batch q88
-      val packed = spark.read.parquet(s"$buildDir/shards")
-        .select($"doc_id", $"lang", $"tokens", $"seq_id", $"seq_off", $"shard")
-        .collect().map(_.toSeq).toSet
-      val batch = SparkEntry.queries("q88_corpus_build")(spark, SfDir)
-        .collect().map(_.toSeq).toSet
-      assert(packed == batch,
-        s"stream-only ${(packed -- batch).take(3)}, batch-only ${(batch -- packed).take(3)}")
-      // artifact 2: the live labels equal the full star recompute over
-      // the SAME curated corpus (gate -> dedup -> sample batch replay)
-      import graft.operators.{Relational, Sampling, TextAnalysis}
-      val gated = Tables.documents(spark, SfDir)
-        .withColumn("quality", TextAnalysis.qualityScore(graft.functions.F.tokens($"text")))
-        .filter($"quality" >= 0.3)
-        .withColumn("text_hash", md5(trim(regexp_replace($"text", "\\s+", " "))))
-      val curated = Relational.dedupKeepFirstAgg(gated,
-          keys = Seq($"text_hash"), order = Seq($"doc_id"))
-        .filter(Sampling.stratifiedKeep($"doc_id", $"lang"))
-        .select($"doc_id", $"text").cache()
-      val live = spark.read
-        .parquet(s"${graft.streaming.EventStreams.currentSnapshotDir(clusterDir).get}/labels")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val full = Dedup.connectedComponents(
-        curated.select($"doc_id".as("id")),
-        Dedup.minhashDedupLinks(curated, "doc_id", "text", threshold = 0.9)
-          .select($"id_a", $"id_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      curated.unpersist()
-      assert(live == full,
-        s"live-only ${(live -- full).take(3)}, full-only ${(full -- live).take(3)}")
-    } finally { query.stop(); evalShingles.unpersist() }
+      val stream = MemoryStream[Doc]
+      // one continuous pipeline: each curated micro-batch feeds BOTH the
+      // corpus-build sink (decontaminate -> pack -> shard + manifest) and
+      // the live cluster-maintenance sink — the two downstream artifacts a
+      // training pipeline keeps beside each other
+      val query = DocumentStreams.curateStream(stream.toDF(), carryText = true)
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+          DocumentStreams.corpusBuildSink(evalShingles, buildDir)(b.toDF(), id)
+          DocumentStreams.clusterMaintenanceSink(clusterDir)(b.toDF(), id)
+        }
+        .start()
+      try {
+        docs.grouped((docs.length + 2) / 3).foreach { chunk =>
+          stream.addData(chunk.toSeq)
+          query.processAllAvailable()
+        }
+        // artifact 1: the packed corpus equals batch q88
+        val packed = spark.read.parquet(s"$buildDir/shards")
+          .select($"doc_id", $"lang", $"tokens", $"seq_id", $"seq_off", $"shard")
+          .collect().map(_.toSeq).toSet
+        val batch = SparkEntry.queries("q88_corpus_build")(spark, SfDir)
+          .collect().map(_.toSeq).toSet
+        assert(packed == batch,
+          s"stream-only ${(packed -- batch).take(3)}, batch-only ${(batch -- packed).take(3)}")
+        // artifact 2: the live labels equal the full star recompute over
+        // the SAME curated corpus (gate -> dedup -> sample batch replay)
+        import graft.operators.{Relational, Sampling, TextAnalysis}
+        val gated = Tables.documents(spark, SfDir)
+          .withColumn("quality", TextAnalysis.qualityScore(graft.functions.F.tokens($"text")))
+          .filter($"quality" >= 0.3)
+          .withColumn("text_hash", md5(trim(regexp_replace($"text", "\\s+", " "))))
+        val curated = Relational.dedupKeepFirstAgg(gated,
+            keys = Seq($"text_hash"), order = Seq($"doc_id"))
+          .filter(Sampling.stratifiedKeep($"doc_id", $"lang"))
+          .select($"doc_id", $"text").cache()
+        val live = spark.read
+          .parquet(s"${graft.streaming.EventStreams.currentSnapshotDir(clusterDir).get}/labels")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val full = Dedup.connectedComponents(
+          curated.select($"doc_id".as("id")),
+          Dedup.minhashDedupLinks(curated, "doc_id", "text", threshold = 0.9)
+            .select($"id_a", $"id_b"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        curated.unpersist()
+        assert(live == full,
+          s"bound $bound: live-only ${(live -- full).take(3)}, full-only ${(full -- live).take(3)}")
+      } finally query.stop()
+    }
+    evalShingles.unpersist()
   }
 
   test("corpus build sink is split-invariant: random micro-batch cuts reproduce batch q88") {
@@ -866,30 +875,34 @@ class StreamingSpec extends SpecBase {
     val docs = Tables.documents(spark, SfDir)
       .select($"doc_id", $"text").orderBy($"doc_id").collect()
     val (first, rest) = docs.splitAt(docs.length * 2 / 3)
-    val outDir = java.nio.file.Files.createTempDirectory("clusters_crash").toString
-    val sink = DocumentStreams.clusterMaintenanceSink(outDir) _
-    sink(first.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text"), 0L)
-    // CRASH SIMULATION: batch 1's docs + docmax land, but the process
-    // dies before the labels snapshot publishes
-    rest.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$outDir/docs/batch=1")
-    Seq(rest.map(_.getLong(0)).max).toDF("max_id")
-      .write.mode("overwrite").parquet(s"$outDir/docmax/batch=1")
-    // the REPLAYED batch filters to zero fresh rows — the coverage meta
-    // must still notice the unlabeled ids and re-cluster them (an
-    // early return here loses batch 1's links forever)
-    sink(rest.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text"), 1L)
-    val live = spark.read
-      .parquet(s"${graft.streaming.EventStreams.currentSnapshotDir(outDir).get}/labels")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val all = Tables.documents(spark, SfDir).select($"doc_id", $"text")
-    val full = Dedup.connectedComponents(
-      all.select($"doc_id".as("id")),
-      Dedup.minhashDedupLinks(all, "doc_id", "text", threshold = 0.9)
-        .select($"id_a", $"id_b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(live == full,
-      s"live-only ${(live -- full).take(3)}, full-only ${(full -- live).take(3)}")
+    // the sink's CC calls and the full recompute run on the driver
+    // union-find (default bound) and on the distributed contraction (0)
+    for (bound <- Seq(None, Some("0"))) withCcDriverBound(bound) {
+      val outDir = java.nio.file.Files.createTempDirectory("clusters_crash").toString
+      val sink = DocumentStreams.clusterMaintenanceSink(outDir) _
+      sink(first.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text"), 0L)
+      // CRASH SIMULATION: batch 1's docs + docmax land, but the process
+      // dies before the labels snapshot publishes
+      rest.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$outDir/docs/batch=1")
+      Seq(rest.map(_.getLong(0)).max).toDF("max_id")
+        .write.mode("overwrite").parquet(s"$outDir/docmax/batch=1")
+      // the REPLAYED batch filters to zero fresh rows — the coverage meta
+      // must still notice the unlabeled ids and re-cluster them (an
+      // early return here loses batch 1's links forever)
+      sink(rest.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text"), 1L)
+      val live = spark.read
+        .parquet(s"${graft.streaming.EventStreams.currentSnapshotDir(outDir).get}/labels")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val all = Tables.documents(spark, SfDir).select($"doc_id", $"text")
+      val full = Dedup.connectedComponents(
+        all.select($"doc_id".as("id")),
+        Dedup.minhashDedupLinks(all, "doc_id", "text", threshold = 0.9)
+          .select($"id_a", $"id_b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(live == full,
+        s"bound $bound: live-only ${(live -- full).take(3)}, full-only ${(full -- live).take(3)}")
+    }
   }
 
   test("streaming incremental dedup (stream-static anti join) matches batch q81's keep set") {

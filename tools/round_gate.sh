@@ -38,7 +38,7 @@ done
 
 if [ "$mode" = "bench" ] || [ "$mode" = "sf1" ]; then
   echo "== sf0.1 bench + bytes diff"
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"'
   cp target/bench.json /tmp/round_gate_sf01.json
   python3 tools/bytes_diff.py tools/baselines/bytes_sf01_r11_final.json /tmp/round_gate_sf01.json
@@ -49,7 +49,7 @@ if [ "$mode" = "sf1" ]; then
   # ScaleUp is fingerprint-gated: a no-op when target/sf1 matches the
   # current sf0.1 source, a rebuild when the driver regenerated testdata
   sbt -batch "runMain graft.tools.ScaleUp" >/dev/null 2>&1
-  SPARK_GRAFT_SF_DIR=target/sf1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_QUICK=1 \
+  SPARK_GRAFT_SF_DIR=target/sf1 SPARK_GRAFT_CPUS="$(nproc)" SPARK_GRAFT_QUICK=1 \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"'
   python3 tools/bytes_diff.py --ratio 12 /tmp/round_gate_sf01.json target/bench.json || \
     echo "(ratio flags above: re-probe flagged queries warmed+solo before adjudicating)"
