@@ -17,14 +17,15 @@ object SparkEntry {
     ProfileQueries.defs, AnalyticsQueries.defs, ConnectorQueries.defs,
     BenchmarkQueries.defs))
 
-  /** Union of query families. A name registered by two families throws:
-    * `++` would silently keep only one of the two queries. */
-  private[graft] def mergeUnique(families: Seq[Map[String, QueryDef]]): Map[String, QueryDef] =
-    families.foldLeft(Map.empty[String, QueryDef]) { (acc, family) =>
-      val dups = family.keySet.intersect(acc.keySet)
-      require(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
-      acc ++ family
-    }
+  /** Union of query families. A name registered twice, inside one family
+    * or by two, throws: a map would silently keep only one of the two
+    * queries. */
+  private[graft] def mergeUnique(families: Seq[Seq[(String, QueryDef)]]): Map[String, QueryDef] = {
+    val all = families.flatten
+    val dups = all.groupBy(_._1).collect { case (name, defs) if defs.size > 1 => name }
+    require(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+    all.toMap
+  }
 
   /** Flagship on /root/testdata/sf0.001 (driver smoke-checks rows>0): the
     * full card-derivation pipeline — the reference's to_dp.py flow

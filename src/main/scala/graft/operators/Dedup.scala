@@ -543,21 +543,9 @@ object Dedup {
     val sigs = minhashSignatures(flagged, idCol, textCol, k, shingleWidth)
       .transform(graft.CheckpointRegistry.local(_, false)) // referenced by banding AND twice by verify
     val newIds = flagged.select(col(idCol).as("id"), col("__new").as("is_new"))
-    incrementalMinhashLabelsFromSigs(df.select(col(idCol).as("id")), sigs, newIds,
-      labelsOld, k, bands, threshold)
-  }
-
-  /** [[incrementalMinhashLabels]] over PRECOMPUTED signatures — same
-    * contract (monotone arrival; see above), but `sigs` (id, sh_set, sig)
-    * comes from the caller so one materialized signature pass can serve
-    * both the previous-sync chain and the incremental probe (q130), or a
-    * persisted signature artifact at scale. `newIds` is (id, is_new). */
-  def incrementalMinhashLabelsFromSigs(ids: DataFrame, sigs: DataFrame,
-                                       newIds: DataFrame, labelsOld: DataFrame,
-                                       k: Int = 64, bands: Int = 16,
-                                       threshold: Double = 0.7): DataFrame =
-    incrementalCompose(ids,
+    incrementalCompose(df.select(col(idCol).as("id")),
       incrementalStarLinksFromSigs(sigs, newIds, k, bands, threshold), labelsOld)
+  }
 
   /** The new-endpoint star links of the incremental flow (verified pairs
     * with `id_b` new), exposed so a caller can materialize them CONCURRENTLY
@@ -674,13 +662,10 @@ object Dedup {
     // language.
     val logInvT = math.log(1.0 / threshold)
     val band = floor(log(greatest(col("sz"), lit(1)).cast("double")) / lit(logInvT)).cast("int")
-    // Pair evaluation is the compute bottleneck, and AQE would coalesce the
-    // tiny mask exchange down to one partition — pin the probe side's
-    // parallelism so the O(pairs) work uses every core. r12: hash-keyed
-    // on the unique id (keyless repartition pays sortBeforeRepartition;
-    // hashing is map-side free and retry-deterministic), join results
-    // are partitioning-invariant.
-    val a = masks.repartition(df.sparkSession.sparkContext.defaultParallelism, col("id"))
+    // Pair evaluation is the compute bottleneck: spread the probe side on
+    // the unique id so the O(pairs) work uses every core when the mask
+    // checkpoint has fewer partitions than cores.
+    val a = Relational.spreadForCompute(masks, col("id"))
       .select(col("id").as("id_a"), col("blk").as("blk_a"), band.as("band_a"),
         col("m0").as("m0_a"), col("rest").as("rest_a"), col("sz").as("sz_a"))
     val b = masks
@@ -851,10 +836,7 @@ object Dedup {
     * returned frame may read some of them, so the caller releases it after
     * its action (`CheckpointRegistry.releaseAll`, or `release` on it).
     */
-  def connectedComponents(ids: DataFrame, links: DataFrame): DataFrame =
-    connectedComponents(ids, links, jumpEvery = 4)
-
-  def connectedComponents(ids: DataFrame, links: DataFrame, jumpEvery: Int): DataFrame = {
+  def connectedComponents(ids: DataFrame, links: DataFrame): DataFrame = {
     val idType = ids.schema("id").dataType
     val driverOrd: Option[Ordering[Any]] = idType match {
       case org.apache.spark.sql.types.LongType =>
@@ -889,7 +871,7 @@ object Dedup {
         .join(labels, Seq("id"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("label"))
     } else {
-      contractAndSolve(ids, linkCk, idType, driverOrd, maxDriverEdges, jumpEvery)
+      contractAndSolve(ids, linkCk, idType, driverOrd, maxDriverEdges)
     }
   }
 
@@ -903,8 +885,8 @@ object Dedup {
     * on the driver (when it fits the budget) or with the BSP loop. */
   private def contractAndSolve(ids: DataFrame, linkCk: DataFrame,
                                idType: org.apache.spark.sql.types.DataType,
-                               driverOrd: Option[Ordering[Any]], maxDriverEdges: Long,
-                               jumpEvery: Int): DataFrame = {
+                               driverOrd: Option[Ordering[Any]],
+                               maxDriverEdges: Long): DataFrame = {
     // Size the loop's layout to the LABEL table, not the session default:
     // labels are one row per id (tiny next to the edge list), and each
     // round runs several jobs — oversized partition counts turn the loop
@@ -977,7 +959,7 @@ object Dedup {
         // one direction suffices for union-find; halves the collected rows
         unionFindOnDriver(cEdges.filter(col("u") < col("v")), idType, driverOrd.get)
       } else {
-        solveResidueBsp(cEdges, nPart, jumpEvery)
+        solveResidueBsp(cEdges, nPart)
       }
     // the loop/driver-solve is done with the contracted edge list; only
     // labels0 and the final `labels` stay live — the RETURNED frame's
@@ -1037,7 +1019,7 @@ object Dedup {
 
   /** The distributed BSP min-label loop over the contracted residue —
     * the fallback when the residue exceeds the driver budget. */
-  private def solveResidueBsp(cEdges: DataFrame, nPart: Int, jumpEvery: Int): DataFrame = {
+  private def solveResidueBsp(cEdges: DataFrame, nPart: Int): DataFrame = {
     // Smart init over the residue: its node set is exactly cEdges'
     // v-side (edges are bidirectional); contracted nodes with no
     // surviving edge are already final.
@@ -1051,6 +1033,7 @@ object Dedup {
     var changed = true
     var rounds = 0
     val maxRounds = 64
+    val jumpEvery = 4 // pointer-jump period, see the loop body
     val labelType = labels.schema("label").dataType
     // NOTE pitfalls measured here: a pointer-jump self-join or a
     // multi-step body on the UNMATERIALIZED frame recomputes the round's

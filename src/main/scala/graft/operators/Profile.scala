@@ -46,33 +46,17 @@ object Profile {
   /** Profile `cols` of `df`: one row per column —
     * (col_name, n_rows, n_nulls, n_distinct, min_s, max_s).
     *
-    * `repartitionTo`: the SMALL-SPLIT regime knob. Both passes are
-    * compute-heavy per row (#cols aggregate updates / renders), so on a
-    * table with fewer parquet splits than cores they run single-threaded;
-    * repartitioning first makes parallelism follow CPU — and because both
-    * passes then consume the IDENTICAL exchange, Catalyst's ReuseExchange
-    * collapses the plan to ONE scan + one shuffle + two aggregate
-    * consumers (PlanSpec pins it). At 100 TB splits are plentiful and a
-    * full-table shuffle is the wrong trade: leave it None there — the
-    * plan becomes two shuffle-free scans instead. */
-  def profile(df: DataFrame, cols: Seq[String], repartitionTo: Option[Int] = None,
-              repartitionKeys: Seq[Column] = Nil): DataFrame = {
+    * Both passes are compute-heavy per row, so a caller on a table with
+    * fewer splits than cores spreads `df` first
+    * ([[Relational.spreadForCompute]]): both passes then consume the
+    * identical exchange, and ReuseExchange plans one scan + one shuffle
+    * (PlanSpec pins it for q104). */
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile: need at least one column")
     require(cols.distinct.size == cols.size,
       "profile: duplicate column names produce ambiguous aggregate aliases")
     val types = cols.map(c => c -> df.schema(c).dataType).toMap
-    val projected = df.select(cols.map(col): _*)
-    // r12: hash-partition on caller-supplied high-cardinality keys when
-    // given — a keyless repartition(n) locally sorts its whole input
-    // first (sortBeforeRepartition, retry determinism), which on the
-    // single-split local regime is a serial pre-pass charged to the one
-    // scan task; hashing is map-side free and both passes still consume
-    // the IDENTICAL exchange (ReuseExchange, PlanSpec-pinned). Global
-    // aggregates are partitioning-invariant, so results are unchanged.
-    val base = repartitionTo.map { n =>
-      if (repartitionKeys.nonEmpty) projected.repartition(n, repartitionKeys: _*)
-      else projected.repartition(n)
-    }.getOrElse(projected)
+    val base = df.select(cols.map(col): _*)
 
     // pass A: single aggregate row, then stack it back out to per-column rows
     val aggs = cols.flatMap { c =>

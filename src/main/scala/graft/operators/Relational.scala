@@ -12,40 +12,52 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
-  /** Layout-adaptive lesson-4 compute spread (r11 optimization round).
+  /** The one layout-adaptive compute spread: every decision to
+    * hash-spread rows for a CPU-bound chain is made here.
     *
     * A CPU-heavy map chain downstream of a scan is bounded by the scan's
-    * split count, and parquet cannot split below a row group — locally
-    * every test table is ONE row group, so such chains ran single-task
-    * regardless of `maxPartitionBytes`/`openCostInBytes` (measured; guide
-    * §2.5 "input skew: one huge unsplittable file … repartition
-    * immediately after the read"). But an UNCONDITIONAL repartition is a
+    * split count, and parquet cannot split below a row group, so on a
+    * table with fewer splits than cores such a chain runs on a few tasks
+    * (guide §2.5: "input skew: one huge unsplittable file … repartition
+    * immediately after the read"). An UNCONDITIONAL repartition is the
     * 100 TB anti-pattern: where the scan already has thousands of splits
-    * the exchange buys nothing and ships the whole payload once (guide
-    * §8's rule — don't move heavy bytes without a reason). So the spread
-    * fires only when the source's actual partition count is below the
-    * session's parallelism: locally (1-3 splits) it spreads; on a real
-    * corpus it is a planner-time no-op. Hash-partitioned on a
-    * deterministic high-cardinality key, NOT round-robin: keyless
-    * repartition(n) locally sorts its whole input first
-    * (sortBeforeRepartition, for retry determinism) — measured 0.8 s
-    * single-task on a 600k-row spread; hashing is map-side free and
-    * deterministic under retries.
+    * the exchange buys nothing and ships the whole payload once. So the
+    * spread fires only when `decideBy`'s planned partition count is below
+    * the session's `defaultParallelism`, and then hash-partitions `df` on
+    * `keys` into exactly that many partitions. Locally (1-3 splits) it
+    * spreads; on a real corpus it is a planner-time no-op that returns
+    * `df` itself. Hashing on a deterministic high-cardinality key, not
+    * round-robin: a keyless repartition(n) sorts its whole input first
+    * (sortBeforeRepartition, for retry determinism; measured 0.8 s
+    * single-task on a 600k-row spread), while hashing is map-side free.
+    * Results are partitioning-invariant, so the decision never changes
+    * an output.
+    *
+    * `decideBy` is the frame whose planned split count decides; it
+    * defaults to `df` (Scala allows no default next to varargs, hence the
+    * overload). Reading the count plans `decideBy`'s whole subtree, and
+    * under AQE planning a join or aggregate runs its shuffle stages. So a
+    * caller that spreads a frame with a join or aggregate below it passes
+    * the input scan that frame's layout derives from: q65's card spread
+    * deciding from its services scan instead of the mid-pipeline join cut
+    * its build from 2.3 s to 0.75 s (BASELINE.md, r11-opt).
+    *
+    * `spark.graft.spread.assertMinKeys` (unset by default) is a dev/test
+    * guard, not a production setting: when armed, every firing spread
+    * runs one approx_count_distinct job over `df` at construction and
+    * throws if the key tuple has fewer distinct values than the floor. A
+    * low-cardinality key would hash the input into a handful of
+    * partitions and serialize the stage the spread exists to parallelize
+    * (guide §2.5 wants 20-100x more distinct keys than partitions).
+    * SpreadKeySpec arms it and constructs every spread-bearing query.
     */
-  def spreadForCompute(df: DataFrame, keys: Column*): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val target = sc.defaultParallelism
-    // metadata-only: resolves the scan's planned splits, runs no job
-    val planned = df.rdd.getNumPartitions
-    if (planned >= target) df
+  def spreadForCompute(df: DataFrame, keys: Column*): DataFrame =
+    spreadForCompute(df, df, keys: _*)
+
+  def spreadForCompute(df: DataFrame, decideBy: DataFrame, keys: Column*): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (decideBy.rdd.getNumPartitions >= target) df
     else {
-      // r12 dev/test guard (off by default — it runs a job): a
-      // low-cardinality spread key hashes its whole input into a handful
-      // of partitions and silently SERIALIZES the stage this operator
-      // exists to parallelize (guide §2.5 wants 20-100x more distinct
-      // key values than partitions). SpreadKeySpec sets the conf and
-      // constructs every spread-bearing query, so a future key
-      // regression fails a test instead of shipping.
       df.sparkSession.conf.getOption("spark.graft.spread.assertMinKeys")
         .map(_.toLong).filter(_ > 0L).foreach { minKeys =>
           val n = df.select(

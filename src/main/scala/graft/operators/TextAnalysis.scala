@@ -79,17 +79,9 @@ object TextAnalysis {
     * swallow nulls; no content -> no fingerprint is the honest contract.
     * Returns (id, min_shingle_fp). */
   def minShingleFingerprints(df: DataFrame, idCol: String, textCol: String,
-                             w: Int = 8,
-                             repartitionTo: Option[Int] = None): DataFrame = {
+                             w: Int = 8): DataFrame = {
     import graft.functions.expressions.{Shingles, XxHash64ArrayMin}
-    // repartitionTo is the small-split LOCAL knob (Profile.profile's
-    // pattern): a single parquet split would otherwise serialize the
-    // per-token kernel onto one task. Default OFF — at scale the scan
-    // already has parallelism and a forced round-robin exchange of full
-    // document text is exactly the shuffle this map-only form exists to
-    // avoid.
-    val src = repartitionTo.map(df.repartition(_)).getOrElse(df)
-    src.select(col(idCol).as("id"),
+    df.select(col(idCol).as("id"),
         XxHash64ArrayMin(Shingles(F.tokens(col(textCol)), w)).as("min_shingle_fp"))
   }
 

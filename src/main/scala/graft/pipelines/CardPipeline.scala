@@ -118,18 +118,6 @@ object CardPipeline {
       col("l_linestatus").as("service_status"),
       col("l_shipdate").as("service_date"))
 
-    // r11: same layout alignment as the branch merge above — the card
-    // dedup aggregate consumes this exchange directly (fused partial+
-    // final, one sort). The fire-or-not decision reads the SERVICES
-    // scan's split count, not the joined frame's: spreadForCompute's
-    // `.rdd` probe physically plans its whole subtree, and doing that to
-    // the mid-pipeline join re-planned the branch pipeline once more per
-    // construction (~1 s of q65's build wall, ProfWall-measured). The
-    // scan probe is the same signal (the join's layout is scan-derived)
-    // at scan-planning cost.
-    val spreadCards = services.rdd.getNumPartitions <
-      spark.sparkContext.defaultParallelism
-
     // r12 (guide §2.3/§8 — the same narrow-dedup move as the branch
     // merge): the card dedup used to consume services ⋈ FULL branch
     // payload, so its exchange + min_by sort carried every org/branch
@@ -143,8 +131,9 @@ object CardPipeline {
       .join(branches.select(col("branch_id"), col("branch_key")), "branch_id")
       .withColumn("service_id", F.hashKey(col("branch_id"), col("service_seq")))
       .withColumn("card_id", F.hashKey(col("branch_key"), col("service_id")))
-      .transform(df => if (spreadCards)
-        df.repartition(spark.sparkContext.defaultParallelism, col("card_id")) else df)
+      // the card dedup aggregate consumes this exchange directly; the
+      // join below it decides from its services scan
+      .transform(Relational.spreadForCompute(_, services, col("card_id")))
 
     // unique (service, branch) — the reference's flat-table dedup.
     // (service_date, service_seq) alone is NOT a total order — the test

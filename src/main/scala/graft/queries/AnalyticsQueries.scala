@@ -15,7 +15,7 @@ object AnalyticsQueries {
 
   private val Srcs = (0 until 20).map(i => s"src$i")
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q108: COHORT RETENTION — users grouped by signup day, counted on
     // each later day they were active (the growth report next to q107's

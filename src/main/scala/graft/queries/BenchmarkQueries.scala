@@ -35,7 +35,7 @@ object BenchmarkQueries {
     when(x % 5 === 0, "Good").when(x % 5 === 1, "Bad")
       .when(x % 5 === 2, "Neutral").when(x % 5 === 4, "Good")
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q149: benchmark scoring — one output row per probe query. The
     // cards arm replays run_single_benchmark's loop as a per-card

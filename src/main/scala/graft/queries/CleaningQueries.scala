@@ -19,7 +19,7 @@ object CleaningQueries {
   private val PhoneRe = "0[0-9]{1,2}-[0-9]{7}"
   private val LongNumRe = "[0-9]{9,}"
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q73: PII scrub — the redaction pass every published/training corpus
     // needs. Synthetic PII (email, phone, 9-digit id) injects per doc so

@@ -83,7 +83,7 @@ object ConnectorQueries {
   // meser/__init__.py:152 sanitize magic values (else-branch nulling)
   private val MsMissing = Seq("NULL", "-1", "לא ידוע", "לא משויך", "רב תכליתי")
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q137: branch location keys (operators/entities/__init__.py:253
     // calc_address + :276 calc_location_key): compose the address key

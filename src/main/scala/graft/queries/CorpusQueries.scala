@@ -94,7 +94,7 @@ object CorpusQueries {
       .transform(graft.CheckpointRegistry.local(_, true))
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q80: unigram-LM log-probability scoring — the model-based quality
     // filter (CCNet/KenLM posture) reduced to its scalable core: fit a

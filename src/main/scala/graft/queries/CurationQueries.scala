@@ -11,7 +11,7 @@ import graft.operators.Curation
   */
 object CurationQueries {
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q46: copy_from_curation_base — gate chain (ACTIVE status, decision
     // not Rejected/Suspended, has services), decision defaulting to 'New',

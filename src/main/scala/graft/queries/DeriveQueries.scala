@@ -10,7 +10,7 @@ import graft.functions.F
   */
 object DeriveQueries {
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q33: multiplicative relevance score (to_es.py:24 card_score — tiered
     // boosts, sqrt growth on entity counts). Shape preserved: boolean

@@ -14,7 +14,7 @@ import graft.operators.{EsDocs, Relational}
   */
 object EsQueries {
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q44: multi-doc-type ES union. Three document flows over the TPC-H
     // analogs — responses (order priorities + taxonomy parent),

@@ -12,7 +12,7 @@ import graft.operators.Relational
   */
 object EtlQueries {
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q11: taxonomy parent expansion (helpers.py:100). Pure array
     // expression per row — no explode, no shuffle; scales linearly.

@@ -45,7 +45,7 @@ object EventQueries {
       |)""".stripMargin
 
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q20: tumbling-window aggregation — hourly event rollup. In batch the
     // window key is just a truncated timestamp: one shuffle on

@@ -60,7 +60,7 @@ object GeoQueries {
        |wgs AS (SELECT *, lat6 * 180.0 / pi() AS wgs_lat, lon_r * 180.0 / pi() AS wgs_lon FROM g6)""".stripMargin
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q43: geo clustering over projected coordinates. Plan: one
     // mapPartitions pass for the projection math (a handful of

@@ -190,7 +190,7 @@ object LlmQueries {
       .select(col("id_a"), col("id_b"), col("cos"))
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q22: exact dedup via content hash (hash-groupBy; the shuffle carries
     // 16-byte hashes, not document bodies).

@@ -23,7 +23,7 @@ import graft.operators.MediaCodec
   */
 object MediaQueries {
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q101: REAL image decode — render a deterministic 16x16 gray PNG per
     // document (JDK PNG encoder), decode it back (JDK PNG decoder), and

@@ -106,7 +106,7 @@ object PipelineQueries {
          |    || '|' || 'services for ' || organization_kind AS autocompletes
          |FROM named""".stripMargin
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     "q64_card_pipeline" -> QueryDef.of(s"$cardCtes\n$cardSelect\n") { (s, dir) =>
       CardPipeline.cards(s, dir).select(

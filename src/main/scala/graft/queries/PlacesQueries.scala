@@ -240,7 +240,7 @@ object PlacesQueries {
        |)""".stripMargin
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q97: the places table with search scores — the q62 upstream. The
     // name array serializes to a '|' join for the flat compare gate.

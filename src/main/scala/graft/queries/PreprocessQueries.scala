@@ -274,7 +274,7 @@ object PreprocessQueries {
         coalesce(col("resolved_address"), col("id_raw")).as("address"))
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q68: the preprocess_* staging union. Each chain is narrow per-row
     // work with no hash exchange — the union of three file scans keeps

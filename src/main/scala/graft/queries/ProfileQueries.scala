@@ -58,7 +58,7 @@ object ProfileQueries {
        |  COUNT(*) FILTER (WHERE p.$pk IS NULL) AS n_violations
        |FROM $ct c LEFT JOIN (SELECT DISTINCT $pk FROM $pt) p ON c.$ck = p.$pk""".stripMargin
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
     "q105_constraint_check" -> QueryDef.of(
       (PkChecks.map((pkSql _).tupled) ++ RefChecks.map((fkSql _).tupled))
         .mkString("", "\nUNION ALL\n", "\n")) { (s, dir) =>
@@ -103,7 +103,7 @@ object ProfileQueries {
       val cols = Seq("doc_id", "lang", "source", "n_chars")
       // r11: ONE spread + materialization feeds all four aggregate passes
       // (2 snapshots × passA/passB). The old form gave each snapshot its
-      // own repartitionTo exchange (two scans, two 32-way shuffles of the
+      // own repartition exchange (two scans, two 32-way shuffles of the
       // same rows), and a shared repartition would NOT fix it — the slot
       // filters push below a repartition exchange and fork the subtrees
       // (the q75 pushdown trap) — so the share point is a checkpoint.
@@ -125,19 +125,11 @@ object ProfileQueries {
     "q104_table_profile" -> QueryDef.of(
       AllCols.map(c => colSql(c, DblCols.contains(c))).mkString("", "\nUNION ALL\n", "\n")) {
       (s, dir) =>
-        val li = Tables.lineitem(s, dir)
-        // r12: the spread is now CONDITIONAL on the scan's planned split
-        // count (the spreadForCompute criterion) — the old unconditional
-        // Some(parallelism) would shuffle the whole fact table at 100 TB,
-        // exactly the regime the Profile scaladoc says to leave None
-        // (two shuffle-free scans). Keyed on the high-cardinality line
-        // PK so the local exchange skips the keyless-repartition sort.
-        val spread = li.rdd.getNumPartitions < s.sparkContext.defaultParallelism
-        Profile.profile(li, AllCols,
-          repartitionTo = if (spread) Some(s.sparkContext.defaultParallelism) else None,
-          repartitionKeys = Seq(
-            org.apache.spark.sql.functions.col("l_orderkey"),
-            org.apache.spark.sql.functions.col("l_linenumber")))
+        import org.apache.spark.sql.functions.col
+        // keyed on the line PK; one exchange feeds both profiler passes
+        Profile.profile(graft.operators.Relational.spreadForCompute(
+          Tables.lineitem(s, dir).select(AllCols.map(col): _*),
+          col("l_orderkey"), col("l_linenumber")), AllCols)
     },
 
     // q123: the 100 TB form of q104 as a registered query (the q121

@@ -12,7 +12,7 @@ import graft.operators.Relational
   */
 object RelationalQueries {
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q01: group + aggregate (dataflows join_with_self; to_dp.py:710).
     // TPC-H Q1 shape. Filter reaches the parquet scan as a pushed predicate;

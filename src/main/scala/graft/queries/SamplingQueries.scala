@@ -32,7 +32,7 @@ object SamplingQueries {
   private val rate8Sql =
     "CASE WHEN lang = 'en' THEN 4 WHEN lang IN ('zh','es','de','fr') THEN 2 ELSE 1 END"
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q69: deterministic stratified sampling — the data-mixing primitive.
     // Membership is hash(doc_id) mod 8 < per-stratum rate: no shuffle, no

@@ -9,7 +9,7 @@ import graft.{QueryDef, Tables}
   */
 object TaggingQueries {
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q38: auto-tagging (autotagging.py:22): a small rule table (query
     // string -> tags) applied to every row — matched when a searched field

@@ -11,7 +11,7 @@ object ToolsQueries {
 
   private val DomainRe = "(?i)^[a-z0-9][a-z0-9\\-\\.]{0,61}[a-z0-9]\\.[a-z]{2,}$"
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q60: fix_situations (to_dp.py:99) — the last uncovered to_dp.py row
     // transform: drop BOTH gender ids when both present (keep a lone one),

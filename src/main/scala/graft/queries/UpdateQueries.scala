@@ -12,7 +12,7 @@ import graft.functions.F
   */
 object UpdateQueries {
 
-  val defs: Map[String, QueryDef] = Map(
+  val defs: Seq[(String, QueryDef)] = Seq(
 
     // q36: upsert flow (update_table.py:56): current FULL OUTER JOIN
     // fetched on the row id; rows present in fetched become ACTIVE with

@@ -84,4 +84,52 @@ class RelationalSpec extends SpecBase {
     val Row(k: Long, d: Long, name: String) = stat.select("kept", "dropped", "stat").head()
     assert(k == 2 && d == 3 && name == "s")
   }
+
+  /** Jobs submitted while `body` ran: the distance between the ids of two
+    * one-task marker jobs. Job ids are assigned at submission, so unlike
+    * a listener-fed count this needs no wait for the event bus. */
+  private def jobsRunBy(body: => Unit): Int = {
+    def marker(): Int = {
+      val f = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+      f.get()
+      f.jobIds.head
+    }
+    val before = marker()
+    body
+    marker() - before - 1
+  }
+
+  test("spreadForCompute returns a frame with >= parallelism partitions as-is") {
+    val n = spark.sparkContext.defaultParallelism
+    val wide = spark.range(0L, 1000L, 1L, n).toDF()
+    assert(Relational.spreadForCompute(wide, $"id") eq wide)
+    // the deciding frame, not the spread one, sets the count
+    val narrow = spark.range(0L, 1000L, 1L, 1).toDF()
+    assert(Relational.spreadForCompute(narrow, wide, $"id") eq narrow)
+  }
+
+  test("spreadForCompute gives a 1-split scan exactly one hash exchange at parallelism") {
+    val n = spark.sparkContext.defaultParallelism
+    val scan = Tables.customer(spark, SfDir)
+    assert(scan.rdd.getNumPartitions == 1, "premise: the sf0.001 customer scan has one split")
+    val plan = Relational.spreadForCompute(scan, $"c_custkey", $"c_name")
+      .queryExecution.executedPlan.toString
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toList
+    assert(exchanges.size == 1, s"expected one exchange:\n$plan")
+    assert("""Exchange hashpartitioning\(c_custkey#\d+L?, c_name#\d+, (\d+)\)""".r
+      .findFirstMatchIn(exchanges.head).map(_.group(1)).contains(n.toString),
+      s"expected hashpartitioning(c_custkey, c_name, $n):\n$plan")
+  }
+
+  test("spreading a join while deciding from its scan runs no Spark job") {
+    val orders = Tables.orders(spark, SfDir)
+    val customer = Tables.customer(spark, SfDir)
+    def joined = orders.join(customer, $"o_custkey" === $"c_custkey")
+    assert(orders.rdd.getNumPartitions < spark.sparkContext.defaultParallelism,
+      "premise: the spread fires")
+    assert(jobsRunBy(Relational.spreadForCompute(joined, orders, $"o_orderkey")) == 0)
+    // deciding from the join itself plans it adaptively, which runs its
+    // query stages: the cost the deciding frame exists to avoid
+    assert(jobsRunBy(Relational.spreadForCompute(joined, $"o_orderkey")) > 0)
+  }
 }

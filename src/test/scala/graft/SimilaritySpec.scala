@@ -138,7 +138,7 @@ class SimilaritySpec extends SpecBase {
   }
 
   test("q119 cluster-balanced draw: cover, cap arithmetic, membership, determinism") {
-    val q = graft.queries.LlmQueries.defs("q119_cluster_balance").build
+    val q = SparkEntry.queries("q119_cluster_balance")
     val out = q(spark, SfDir).collect()
     val nVecs = emb.count()
     // every vector lands in exactly one cluster

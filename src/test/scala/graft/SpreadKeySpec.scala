@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.spark.sql.functions._
 
 /** r12 spread-key hygiene guard (r11 VERDICT item 10): every
@@ -15,7 +20,8 @@ import org.apache.spark.sql.functions._
   * dev/test only); CONSTRUCTING each spread-bearing query then trips the
   * assertion if any key falls under the floor. The list below names
   * every registered query whose build routes through spreadForCompute —
-  * a new spread site should be added here.
+  * a new spread site should be added here. A grep guard keeps every
+  * spread decision inside spreadForCompute, so none escapes the check.
   */
 class SpreadKeySpec extends SpecBase {
 
@@ -38,7 +44,12 @@ class SpreadKeySpec extends SpecBase {
     "q75_decontaminate",           // key: doc_id
     "q34_es_docs",                 // key: o_orderkey
     "q64_card_pipeline",           // key: branch_key (hash of 3 columns)
-    "q65_publish_docs")            // same pipeline + card_id repartition
+    "q65_publish_docs",            // same pipeline + card_id spread
+    "q104_table_profile",          // keys: (l_orderkey, l_linenumber)
+    "q25_ngram_jaccard",           // key: doc_id (jaccardPairs probe side)
+    "q66_dedup_clusters",          // same pair stage
+    "q78_cluster_representatives", // same pair stage
+    "q135_cluster_stats")          // same pair stage
 
   test("every compute spread keys on a high-cardinality expression") {
     // 20x the session parallelism — the low end of the guide §2.5 band;
@@ -60,6 +71,23 @@ class SpreadKeySpec extends SpecBase {
       spark.conf.unset("spark.graft.spread.assertMinKeys")
       CheckpointRegistry.releaseAll()
     }
+  }
+
+  test("no file under src/main decides a compute spread outside Relational.spreadForCompute") {
+    // a split-count probe, or a repartition to the session parallelism,
+    // is a hand-copied spread decision the key guard above never sees
+    val spreadDecision = """getNumPartitions|repartition\(\s*[\w.]*defaultParallelism""".r
+    val sources = Using.resource(Files.walk(Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    assert(sources.nonEmpty, "the guard must see the sources")
+    val offenders = for {
+      f <- sources if f.getFileName.toString != "Relational.scala"
+      text = Files.readString(f)
+      m <- spreadDecision.findAllMatchIn(text)
+    } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+    assert(offenders.isEmpty,
+      s"compute spreads must go through Relational.spreadForCompute:\n${offenders.mkString("\n")}")
   }
 
   test("the armed guard rejects a low-cardinality key") {

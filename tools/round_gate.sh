@@ -41,7 +41,8 @@ if [ "$mode" = "bench" ] || [ "$mode" = "sf1" ]; then
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"'
   cp target/bench.json /tmp/round_gate_sf01.json
-  python3 tools/bytes_diff.py tools/baselines/bytes_sf01_r11_final.json /tmp/round_gate_sf01.json
+  # anchor: graft.Bench at sf0.1, 4 cores, commit 41bd45a
+  python3 tools/bytes_diff.py tools/baselines/bench_sf01_41bd45a_4c.json /tmp/round_gate_sf01.json
 fi
 
 if [ "$mode" = "sf1" ]; then
