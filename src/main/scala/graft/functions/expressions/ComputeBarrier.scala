@@ -32,6 +32,13 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * byte-identical. Trade-off per guide §4.4: other predicates cannot be
   * pushed through it either — apply it to expensive pair-stage
   * expressions, not blanket.
+  *
+  * Legal positions (ComputeBarrierSpec pins each on Spark 4.1): a
+  * projection (`select`/`withColumn`), with filters, sorts, joins and
+  * groupings then reading the projected column. Spark's analyzer
+  * rejects the barrier itself in a join condition and as a sort key
+  * (`AnalysisException`, INVALID_NON_DETERMINISTIC_EXPRESSIONS) and as a
+  * grouping key (`SparkException`, INTERNAL_ERROR).
   */
 case class ComputeBarrier(child: Expression) extends UnaryExpression {
   override def dataType: DataType = child.dataType

@@ -380,23 +380,13 @@ object Dedup {
   /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
     * and emit (band_idx, band_hash) keys. Docs agreeing on any band become
     * candidates. Band keys are high-cardinality -> balanced shuffle. */
-  def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
+  private def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
     transform(
       sequence(lit(0), lit(bands - 1)),
       b => struct(
         b.as("band_idx"),
         xxhash64(b, slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))).as("band_hash")))
 
-  /** Full MinHash+LSH near-dup pipeline: returns verified candidate pairs
-    * (id_a < id_b) with exact shingle-set Jaccard >= `threshold` — the
-    * same set space the signatures estimate, so LSH recall follows the
-    * standard S-curve (P[candidate] = 1-(1-s^r)^b, ~0.99 at s=0.7 with
-    * 16 bands x 4 rows).
-    *
-    * Stages: tokenize -> shingle -> signature -> explode bands ->
-    * self-join on band key -> distinct pairs -> verify with exact Jaccard.
-    * The verify join re-fetches shingle sets by id (broadcast when small).
-    */
   /** Band geometry guard: bands must tile the signature exactly —
     * k % bands != 0 silently discards the signature tail (recall loss),
     * and bands > k makes every band hash a CONSTANT, turning the band
@@ -408,16 +398,28 @@ object Dedup {
     k / bands
   }
 
+  /** One (id, band_idx, band_hash) row per band of each signature in
+    * `sigs` — the band keys every LSH stage below joins or groups on. */
+  private def bandKeys(sigs: DataFrame, k: Int, bands: Int): DataFrame =
+    sigs.select(col("id"), explode(lshBands(col("sig"), bands, bandRows(k, bands))).as("band"))
+      .select(col("id"), col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
+
+  /** Full MinHash+LSH near-dup pipeline: returns verified candidate pairs
+    * (id_a < id_b) with exact shingle-set Jaccard >= `threshold` — the
+    * same set space the signatures estimate, so LSH recall follows the
+    * standard S-curve (P[candidate] = 1-(1-s^r)^b, ~0.99 at s=0.7 with
+    * 16 bands x 4 rows).
+    *
+    * Stages: tokenize -> shingle -> signature -> explode bands ->
+    * self-join on band key -> distinct pairs -> verify with exact Jaccard.
+    * The verify join re-fetches shingle sets by id (broadcast when small).
+    */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 64, bands: Int = 16, shingleWidth: Int = 3,
                       threshold: Double = 0.7): DataFrame = {
-    val rowsPerBand = bandRows(k, bands)
     val sigs = minhashSignatures(df, idCol, textCol, k, shingleWidth)
       .transform(graft.CheckpointRegistry.local(_, false)) // referenced by banding AND twice by verify
-    val banded = sigs.select(
-      col("id"),
-      explode(lshBands(col("sig"), bands, rowsPerBand)).as("band"))
-      .select(col("id"), col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
+    val banded = bandKeys(sigs, k, bands)
     val candidates = banded.as("a")
       .join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -483,14 +485,18 @@ object Dedup {
     * previous-sync recompute and the incremental probe; a production sync
     * reads the persisted signature artifact) skip the per-call signature
     * pass. `sigs` must be materialized (checkpoint/persisted artifact):
-    * it is referenced by banding AND twice by verify. */
+    * it is referenced by banding AND twice by verify.
+    *
+    * With `firstNewId` set, only the links whose `id_b` is at least that
+    * id are returned — exactly the full link set filtered on `id_b`, since
+    * bucket reps still range over every signature. The predicate joins
+    * the `rep < id` candidate filter, ahead of verification: the verified
+    * jaccard sits behind a ComputeBarrier, and no predicate is pushed
+    * through that. */
   def starLinksFromSigs(sigs: DataFrame, k: Int = 64, bands: Int = 16,
-                        threshold: Double = 0.7): DataFrame = {
-    val rowsPerBand = bandRows(k, bands)
-    val banded = sigs.select(
-      col("id"),
-      explode(lshBands(col("sig"), bands, rowsPerBand)).as("band"))
-      .select(col("id"), col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
+                        threshold: Double = 0.7,
+                        firstNewId: Option[Long] = None): DataFrame = {
+    val banded = bandKeys(sigs, k, bands)
     // bucket rep as a partial-combined agg joined back (r11): a
     // min().over(partition by bucket) window sorts a boilerplate
     // mega-bucket's whole membership in one task (lesson 49's class —
@@ -499,9 +505,10 @@ object Dedup {
     // per input split
     val reps = banded.groupBy(col("band_idx"), col("band_hash"))
       .agg(min(col("id")).as("rep"))
+    val isCandidate = firstNewId.foldLeft(col("rep") < col("id"))(_ && col("id") >= _)
     val links = banded
       .join(reps, Seq("band_idx", "band_hash"))
-      .filter(col("rep") < col("id"))
+      .filter(isCandidate)
       .select(col("rep").as("id_a"), col("id").as("id_b"))
       .distinct()
     verifyJaccard(links, sigs.select(col("id"), col("sh_set")), threshold)
@@ -510,85 +517,65 @@ object Dedup {
   /** INCREMENTAL cluster maintenance — extend an existing dedup
     * clustering with a new batch without re-clustering the corpus.
     *
-    * Requires MONOTONE arrival: every new id is greater than every old id
-    * (the natural shape of a growing corpus with assigned ids). The
-    * contract is the CALLER's to enforce — q130 derives `isNew` from the
-    * previous sync's max id and the streaming sink filters arrivals
-    * against it, so both callers satisfy it by construction; violating
-    * it (backfill, id reuse) silently drops links whose new endpoint
-    * became a bucket rep, so any new call site must gate ids the same
-    * way, not merely flag them. Under the contract,
-    * adding new docs never changes any bucket's min, so today's star
-    * links (see [[minhashDedupLinks]]) = the previous sync's star links ∪
-    * links with a new endpoint — and since `id_b > id_a` in every star
-    * pair, "has a new endpoint" is just "id_b is new". The previous
-    * clustering enters as POINTER EDGES (id → label): label-propagation
-    * CC collapses each old component to its label in the first round, so
-    * the iterative work is proportional to the NEW links, not the corpus,
-    * and because an old label is the min member id, the merged
-    * component's min-label equals the full recompute's label — incremental
-    * output is label-for-label identical to re-running the whole star
-    * composition (DedupSpec pins this on real data).
+    * `ids` (column `id`) and `sigs` (id, sh_set, sig, as
+    * [[minhashSignatures]] returns them) cover the whole corpus, old and
+    * new. `sigs` must be materialized (checkpoint/persisted artifact): the
+    * link stage reads it three times. `labelsOld` (id, label) is the
+    * previous sync's clustering of exactly the ids below `firstNewId`.
     *
-    * Locally the signature/banding stage recomputes old docs' band keys;
-    * at scale the previous sync materializes its (band, bucket-min)
-    * index and signatures (bucketed by band hash), making the per-sync
-    * probe new-batch-sized. Results are identical either way.
+    * Monotone arrival is a typed condition: the new batch is every id at
+    * or above `firstNewId`, so each new id is greater than every old one
+    * (the natural shape of a growing corpus with assigned ids). q130
+    * derives the boundary from a max-id scan; the streaming sink passes
+    * its snapshot's coverage + 1; a production sync passes its ingest
+    * watermark. An id below `firstNewId` that `labelsOld` does not cover
+    * (a backfill, a reused id) silently loses its links to other old
+    * docs. Under the contract, adding new docs never changes any bucket's
+    * min, so today's star links (see [[minhashDedupLinks]]) = the previous
+    * sync's star links ∪ the links with `id_b >= firstNewId` (`id_b > id_a`
+    * in every star pair), which [[starLinksFromSigs]] returns with
+    * `firstNewId` set. The previous clustering enters as POINTER EDGES
+    * (label → id), so every old component enters CC as a star on its
+    * label: CC's first contraction collapses them and the iterative work
+    * is proportional to the NEW links (edges within the driver budget are
+    * union-found directly). Because an old label is the min member id,
+    * the merged component's min-label equals the full recompute's label —
+    * incremental output is label-for-label identical to re-running the
+    * whole star composition (DedupSpec pins this on real data).
+    *
+    * The two inputs of the final CC share no dependency, and each fires
+    * jobs of its own (checkpoints, CC's link checkpoint), so they overlap:
+    * a background thread materializes the new-endpoint links while the
+    * calling thread evaluates the by-name `labelsOld`, and FIFO scheduling
+    * back-fills one chain's stragglers with the other's tasks. If
+    * `labelsOld` throws, the link job is joined before the rethrow, so no
+    * job outlives the call.
+    *
+    * Locally the banding stage recomputes old docs' band keys; at scale
+    * the previous sync materializes its (band, bucket-min) index and
+    * signatures (bucketed by band hash), making the per-sync probe
+    * new-batch-sized. Results are identical either way.
     */
-  def incrementalMinhashLabels(df: DataFrame, idCol: String, textCol: String,
-                               isNew: Column, labelsOld: DataFrame,
-                               k: Int = 64, bands: Int = 16, shingleWidth: Int = 3,
+  def incrementalMinhashLabels(ids: DataFrame, sigs: DataFrame, firstNewId: Long,
+                               labelsOld: => DataFrame,
+                               k: Int = 64, bands: Int = 16,
                                threshold: Double = 0.7): DataFrame = {
-    val flagged = df.withColumn("__new", isNew)
-    val sigs = minhashSignatures(flagged, idCol, textCol, k, shingleWidth)
-      .transform(graft.CheckpointRegistry.local(_, false)) // referenced by banding AND twice by verify
-    val newIds = flagged.select(col(idCol).as("id"), col("__new").as("is_new"))
-    incrementalCompose(df.select(col(idCol).as("id")),
-      incrementalStarLinksFromSigs(sigs, newIds, k, bands, threshold), labelsOld)
-  }
-
-  /** The new-endpoint star links of the incremental flow (verified pairs
-    * with `id_b` new), exposed so a caller can materialize them CONCURRENTLY
-    * with the previous-sync chain (guide §2.6 — the two are independent
-    * until [[incrementalCompose]]'s final CC). */
-  def incrementalStarLinksFromSigs(sigs: DataFrame, newIds: DataFrame,
-                                   k: Int = 64, bands: Int = 16,
-                                   threshold: Double = 0.7): DataFrame = {
-    val rowsPerBand = bandRows(k, bands)
-    val banded = sigs.join(newIds, "id")
-      .select(col("id"), col("is_new"),
-        explode(lshBands(col("sig"), bands, rowsPerBand)).as("band"))
-      .select(col("id"), col("is_new"),
-        col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
-    // same agg-join-back rep delivery as minhashDedupLinks (r11 —
-    // lesson 49: never a min window over a mega-bucket)
-    val reps = banded.groupBy(col("band_idx"), col("band_hash"))
-      .agg(min(col("id")).as("rep"))
-    val candNew = banded
-      .join(reps, Seq("band_idx", "band_hash"))
-      // monotone ids: id_b > id_a, so any pair with a new endpoint has a
-      // new id_b — old-old candidates never leave the map side
-      .filter(col("rep") < col("id") && col("is_new"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"))
-      .distinct()
-    verifyJaccard(candNew, sigs.select(col("id"), col("sh_set")), threshold)
-      .select(col("id_a"), col("id_b"))
-  }
-
-  /** Pointer-edge composition: previous labels enter as (label → id)
-    * edges, so every old component enters CC as a star on its label. On
-    * CC's distributed path the first contraction collapses those stars
-    * and the iterative work is proportional to the NEW links; edges that
-    * fit the driver budget are union-found directly (see
-    * [[incrementalMinhashLabels]] for the monotone-arrival contract that
-    * makes the result label-for-label equal to a full recompute). */
-  def incrementalCompose(ids: DataFrame, linksNew: DataFrame,
-                         labelsOld: DataFrame): DataFrame = {
-    val pointer = labelsOld
+    val linksNewF = java.util.concurrent.CompletableFuture.supplyAsync { () =>
+      starLinksFromSigs(sigs, k, bands, threshold, Some(firstNewId))
+        .select(col("id_a"), col("id_b"))
+        .transform(graft.CheckpointRegistry.local(_, true)) // eager — this IS the background materialization
+    }
+    val old =
+      try labelsOld
+      catch { case e: Throwable => scala.util.Try(linksNewF.join()); throw e }
+    val pointer = old
       .filter(col("label") =!= col("id"))
       .select(col("label").as("id_a"), col("id").as("id_b"))
-    connectedComponents(ids,
-      linksNew.select(col("id_a"), col("id_b")).unionByName(pointer))
+    val linksNew = linksNewF.join()
+    val labels = connectedComponents(ids, linksNew.unionByName(pointer))
+    // CC reads its links once, into its own eager checkpoint
+    graft.CheckpointRegistry.release(linksNew)
+    labels
   }
 
   /** Exact token-set Jaccard pairs within a blocking key, computed over
@@ -730,21 +717,25 @@ object Dedup {
     bitCols.reduce((a, b) => a.bitwiseOR(b))
   }
 
+  /** One (id, sim, block_idx, block_val) row per 16-bit block of each
+    * 64-bit signature — the four block buckets both SimHash stages join
+    * or group on. */
+  private def simhashBlocks(sims: DataFrame): DataFrame = {
+    val blockStructs = (0 until 4).map { b =>
+      struct(lit(b).as("block_idx"),
+        shiftright(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL)).as("block_val"))
+    }
+    sims.select(col("id"), col("sim"), explode(array(blockStructs: _*)).as("blk"))
+      .select(col("id"), col("sim"), col("blk.block_idx").as("block_idx"), col("blk.block_val").as("block_val"))
+  }
+
   /** SimHash near-dup pairs with Hamming distance <= maxDist, blocked by
     * 16-bit signature segments (pigeonhole: any pair within distance 3 is
     * guaranteed to agree on one of the 4 blocks; larger distances are
     * found with partial recall — standard SimHash trade-off). */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxDist: Int = 3): DataFrame = {
-    val sims = simhashes(df, idCol, textCol)
-    val blockStructs = (0 until 4).map { b =>
-      struct(lit(b).as("block_idx"),
-        shiftright(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL)).as("block_val"))
-    }
-    val blocked = sims.select(
-      col("id"), col("sim"),
-      explode(array(blockStructs: _*)).as("blk"))
-      .select(col("id"), col("sim"), col("blk.block_idx").as("block_idx"), col("blk.block_val").as("block_val"))
+    val blocked = simhashBlocks(simhashes(df, idCol, textCol))
     blocked.as("a")
       .join(blocked.as("b"),
         col("a.block_idx") === col("b.block_idx") &&
@@ -760,14 +751,7 @@ object Dedup {
     * linear-work rationale as [[minhashDedupLinks]]). */
   def simhashDedupLinks(df: DataFrame, idCol: String, textCol: String,
                         maxDist: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sims = simhashes(df, idCol, textCol)
-    val blockStructs = (0 until 4).map { b =>
-      struct(lit(b).as("block_idx"),
-        shiftright(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL)).as("block_val"))
-    }
-    val blocked = sims.select(col("id"), col("sim"), explode(array(blockStructs: _*)).as("blk"))
-      .select(col("id"), col("sim"), col("blk.block_idx").as("block_idx"), col("blk.block_val").as("block_val"))
+    val blocked = simhashBlocks(simhashes(df, idCol, textCol))
     // rep + the rep's signature from ONE partial-combined aggregate
     // joined back (r11 — lesson 49: the former min/first windows
     // partitioned by block sorted a mega-block in one task); min_by on

@@ -465,47 +465,25 @@ object CorpusQueries {
     // the exact-hash version of this flow; this is the near-dup cluster
     // version.
     "q130_incremental_clusters" -> QueryDef.rowsOnly { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // Batch boundary: in production it arrives as a PARAMETER (the
-      // ingest ledger's watermark) — at 100 TB a max(doc_id) scan is a
-      // full corpus pass spent computing something the pipeline already
-      // knows. The scan-derived 3/4 split stays the deterministic test
-      // default when the conf is unset.
-      val cutoff = s.conf.getOption("spark.graft.incrementalCutoff").map(_.toLong)
-        .getOrElse(
-          docs.agg((floor(max(col("doc_id")) * 3L / 4L) + 1L).cast("long")).head().getLong(0))
-      // r11: ONE signature pass for the whole query. The old-sync chain
-      // (star links over old docs) and the incremental probe previously
-      // each ran their own minhashSignatures pass (ProfWall: the two
-      // heaviest job groups in the run); a signature is a pure per-doc
-      // function, so the old side is exactly the full table filtered to
-      // id < cutoff — share the materialized pass (at scale this frame is
-      // the persisted signature artifact the sync already keeps).
+      // Batch boundary: the deterministic top-quarter split. A production
+      // sync passes its ingest watermark as firstNewId instead — at
+      // 100 TB this max(doc_id) scan is a full corpus pass.
+      val cutoff =
+        docs.agg((floor(max(col("doc_id")) * 3L / 4L) + 1L).cast("long")).head().getLong(0)
+      // ONE signature pass for the whole query: a signature is a pure
+      // per-doc function, so the old side is exactly the full table
+      // filtered to id < cutoff (at scale this frame is the persisted
+      // signature artifact the sync already keeps).
       val sigsAll = Dedup.minhashSignatures(docs, "doc_id", "text", k = 64, shingleWidth = 3)
-        .transform(graft.CheckpointRegistry.local(_, true)) // EAGER: both concurrent chains below read it
-      // Overlap the two independent chains (guide §2.6): the previous-sync
-      // recompute (star links over old ids → CC) and the incremental
-      // new-endpoint link discovery (banding + jaccard verify over the
-      // full signature table) share no dependency until the final
-      // pointer-edge CC — but both are EAGER internally (checkpoint
-      // materializations, CC's link checkpoint), so run sequentially they
-      // serialize their jobs. A background thread materializes the new links
-      // while the main thread computes labelsOld; FIFO scheduling
-      // back-fills the old chain's stragglers with link-verify tasks.
-      val linksNewF = java.util.concurrent.CompletableFuture.supplyAsync { () =>
-        Dedup.incrementalStarLinksFromSigs(sigsAll,
-            sigsAll.select(col("id"), (col("id") >= cutoff).as("is_new")),
-            threshold = 0.9)
-          .select(col("id_a"), col("id_b"))
-          .transform(graft.CheckpointRegistry.local(_, true)) // eager — this IS the background materialization
-      }
-      val labelsOld = Dedup.connectedComponents(
-        docs.filter(col("doc_id") < cutoff).select(col("doc_id").as("id")),
-        Dedup.starLinksFromSigs(sigsAll.filter(col("id") < cutoff), threshold = 0.9)
-          .select(col("id_a"), col("id_b")))
-      Dedup.incrementalCompose(
-          docs.select(col("doc_id").as("id")), linksNewF.join(), labelsOld)
+        .transform(graft.CheckpointRegistry.local(_, true)) // EAGER: both concurrent chains read it
+      Dedup.incrementalMinhashLabels(docs.select(col("doc_id").as("id")), sigsAll, cutoff,
+          // the previous sync's clustering: star links over old ids → CC
+          Dedup.connectedComponents(
+            docs.filter(col("doc_id") < cutoff).select(col("doc_id").as("id")),
+            Dedup.starLinksFromSigs(sigsAll.filter(col("id") < cutoff), threshold = 0.9)
+              .select(col("id_a"), col("id_b"))),
+          threshold = 0.9)
         .withColumn("cluster", col("label")).drop("label")
         .transform(Dedup.withMemberCounts(_))
     },

@@ -142,9 +142,12 @@ object DocumentStreams {
     * near-dup clustering applied per micro-batch: the published LABELS
     * snapshot is always a complete clustering of everything that has
     * arrived (corpus rows append ONCE under docs/batch=<id>, outside the
-    * snapshots), maintained by [[graft.operators.Dedup.incrementalMinhashLabels]]
-    * (old components enter as pointer edges; per-batch iterative work is
-    * proportional to the batch's new links, never the corpus).
+    * snapshots), maintained by [[graft.operators.Dedup.incrementalMinhashLabels]],
+    * the operator q130 runs (old components enter as pointer edges;
+    * per-batch iterative work is proportional to the batch's new links,
+    * never the corpus). One signature pass per batch feeds it; the
+    * snapshot's coverage boundary + 1 is its `firstNewId`, so the live
+    * labels cover exactly the ids below it.
     *
     * Requires monotone doc ids across batches (q130's growing-corpus
     * contract) — and that same contract gives REPLAY SAFETY for free:
@@ -169,7 +172,7 @@ object DocumentStreams {
     // along so the replay guard reads #batches rows, not the corpus.
     // The snapshot protocol covers only the slim (doc_id, label)
     // artifact plus a one-row meta carrying the clustering's COVERAGE
-    // boundary. (Signature recompute inside the operator is the
+    // boundary. (Recomputing every doc's signature per batch is the
     // documented local-mode posture — Dedup.incrementalMinhashLabels'
     // scale path materializes the band index instead.)
     val docsRoot = s"$outDir/docs"
@@ -208,28 +211,31 @@ object DocumentStreams {
     }
     if (coverage == maxAll) return // snapshot already covers every doc
     val all = spark.read.parquet(docsRoot).select(col("doc_id"), col("text"))
+    val ids = all.select(col("doc_id").as("id"))
+    val sigs = Dedup.minhashSignatures(all, "doc_id", "text", k = 64, shingleWidth = 3)
+      .transform(graft.CheckpointRegistry.local(_, false)) // referenced by banding AND twice by verify
     val labels = (live, coverage) match {
       case (Some(dir), Some(cov)) =>
-        val labelsOld = spark.read.parquet(s"$dir/labels")
-        Dedup.incrementalMinhashLabels(all, "doc_id", "text",
-          isNew = col("doc_id") > cov, labelsOld, threshold = threshold)
+        Dedup.incrementalMinhashLabels(ids, sigs, cov + 1,
+          spark.read.parquet(s"$dir/labels"), threshold = threshold)
       case _ => // first publish
-        Dedup.connectedComponents(all.select(col("doc_id").as("id")),
-          Dedup.minhashDedupLinks(all, "doc_id", "text", threshold = threshold)
-            .select(col("id_a"), col("id_b")))
+        Dedup.connectedComponents(ids,
+          Dedup.starLinksFromSigs(sigs, threshold = threshold).select(col("id_a"), col("id_b")))
     }
     try EventStreams.stageAndPublish(outDir, batchId) { staged =>
       labels.write.mode("overwrite").parquet(s"$staged/labels")
       Seq(maxAll.get).toDF("coverage_max_id").coalesce(1)
         .write.mode("overwrite").parquet(s"$staged/meta")
-    } finally
-      // the CC inside incrementalMinhashLabels releases its superseded
-      // per-round checkpoints itself, but its RETURNED lineage still
-      // reads the init + final label checkpoints — only THIS sink knows
-      // when the last action over them has run; without the deep release
-      // a long-lived stream accumulates two label-table checkpoints per
+    } finally {
+      // the CC inside the operator releases its superseded per-round
+      // checkpoints itself, but its RETURNED lineage still reads the
+      // init + final label checkpoints — only THIS sink knows when the
+      // last action over them (and over the signatures) has run; without
+      // the deep release a long-lived stream accumulates checkpoints per
       // micro-batch until a driver GC (the passage-sink ADVICE shape)
       graft.CheckpointRegistry.release(labels)
+      graft.CheckpointRegistry.release(sigs)
+    }
   }
 
   /** foreachBatch CORPUS-BUILD sink — the streaming flagship closing the

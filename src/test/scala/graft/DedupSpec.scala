@@ -9,6 +9,11 @@ class DedupSpec extends SpecBase {
 
   private lazy val docs = Tables.documents(spark, SfDir).cache()
 
+  /** Materialized (id, sh_set, sig) table at the operators' defaults. */
+  private def sigsOf(df: org.apache.spark.sql.DataFrame) =
+    Dedup.minhashSignatures(df, "doc_id", "text", k = 64, shingleWidth = 3)
+      .transform(CheckpointRegistry.local(_, true))
+
   /** Brute-force shingle-set Jaccard pairs — the exact reference answer
     * in the same set space minhash estimates. */
   private def exactPairs(threshold: Double) = {
@@ -302,8 +307,8 @@ class DedupSpec extends SpecBase {
         oldDocs.select($"doc_id".as("id")),
         Dedup.minhashDedupLinks(oldDocs, "doc_id", "text", threshold = th)
           .select($"id_a", $"id_b"))
-      val inc = Dedup.incrementalMinhashLabels(all, "doc_id", "text",
-          isNew = $"doc_id" >= cutoff, labelsOld, threshold = th)
+      val inc = Dedup.incrementalMinhashLabels(all.select($"doc_id".as("id")), sigsOf(all),
+          cutoff, labelsOld, threshold = th)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val full = Dedup.connectedComponents(
         all.select($"doc_id".as("id")),
@@ -320,19 +325,58 @@ class DedupSpec extends SpecBase {
   }
 
   test("q130 takes the batch cutoff as a conf parameter, skipping the max-scan") {
-    // Param-supplied cutoff (same value the scan would derive) must
-    // reproduce the default run exactly — the production hook for a
-    // ledger-watermark boundary without the extra corpus pass.
-    val q = SparkEntry.queries("q130_incremental_clusters")
-    val byScan = q(spark, SfDir)
-      .collect().map(r => (r.getLong(0), r.getAs[Long]("cluster"))).toSet
-    val cutoff = docs.agg((floor(max($"doc_id") * 3L / 4L) + 1L).cast("long")).head().getLong(0)
-    spark.conf.set("spark.graft.incrementalCutoff", cutoff.toString)
-    try {
-      val byParam = q(spark, SfDir)
-        .collect().map(r => (r.getLong(0), r.getAs[Long]("cluster"))).toSet
-      assert(byParam == byScan)
-    } finally spark.conf.unset("spark.graft.incrementalCutoff")
+    // The production hook for a ledger-watermark boundary is the
+    // operator's firstNewId: called directly with the boundary q130's scan
+    // derives, it must reproduce q130's registered output label for label.
+    val byQuery = SparkEntry.queries("q130_incremental_clusters")(spark, SfDir)
+      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("cluster"))).toSet
+    val all = docs.select($"doc_id", $"text")
+    val cutoff = all.agg((floor(max($"doc_id") * 3L / 4L) + 1L).cast("long")).head().getLong(0)
+    val oldDocs = all.filter($"doc_id" < cutoff)
+    val labelsOld = Dedup.connectedComponents(
+      oldDocs.select($"doc_id".as("id")),
+      Dedup.minhashDedupLinks(oldDocs, "doc_id", "text", threshold = 0.9)
+        .select($"id_a", $"id_b"))
+    val byOperator = Dedup.incrementalMinhashLabels(all.select($"doc_id".as("id")), sigsOf(all),
+        cutoff, labelsOld, threshold = 0.9)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(byOperator == byQuery,
+      s"operator-only ${(byOperator -- byQuery).take(3)}, q130-only ${(byQuery -- byOperator).take(3)}")
+  }
+
+  test("incrementalMinhashLabels: a failing labelsOld rethrows only after the background link job ends") {
+    val sigs = sigsOf(docs)
+    // the link job's last step registers its checkpoint, so the count
+    // shows whether that job had finished when the call returned
+    val before = CheckpointRegistry.trackedCount
+    val e = intercept[IllegalStateException] {
+      Dedup.incrementalMinhashLabels(docs.select($"doc_id".as("id")), sigs, 375L,
+        throw new IllegalStateException("previous labels unavailable"))
+    }
+    assert(e.getMessage == "previous labels unavailable")
+    assert(CheckpointRegistry.trackedCount == before + 1, "the new-endpoint link job outlived the call")
+  }
+
+  test("starLinksFromSigs with firstNewId == the full star links filtered to new id_b") {
+    // The incremental link stage adds one candidate predicate; bucket reps
+    // still range over every signature, so its links are exactly the full
+    // composition's links with a new endpoint (id_b), jaccard included.
+    // Boundaries: q130's scan-derived cutoff, and an id that is itself a
+    // link's id_b, so the boundary row is in play.
+    val sigs = sigsOf(docs)
+    val scanCutoff = docs.agg((floor(max($"doc_id") * 3L / 4L) + 1L).cast("long")).head().getLong(0)
+    for (th <- Seq(0.7, 0.9)) {
+      val all = Dedup.starLinksFromSigs(sigs, threshold = th)
+      val idBs = all.select($"id_b").as[Long].collect().sorted
+      for (c <- Seq(scanCutoff, idBs(idBs.length / 2))) {
+        val inc = Dedup.starLinksFromSigs(sigs, threshold = th, firstNewId = Some(c))
+          .collect().toSet
+        val full = all.filter($"id_b" >= c).collect().toSet
+        assert(inc == full,
+          s"th=$th, c=$c: inc-only ${(inc -- full).take(3)}, full-only ${(full -- inc).take(3)}")
+        assert(inc.nonEmpty, s"th=$th, c=$c: no link with a new endpoint; weak data")
+      }
+    }
   }
 
   test("duplicatePassages: exact coverage on a hand-built corpus (k=3)") {
