@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, lit}
 
 /** Loaders for the driver's test tables (see TESTDATA.md).
   *
@@ -60,4 +61,20 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
+
+  /** Synthetic ITM branch coordinates: the test tables carry no geometry,
+    * so q43 and the card pipeline place each row on a 20×25 grid from two
+    * integer keys (easting from `key % 20`, northing from `key % 25`). The
+    * grid collides on purpose so points cluster. */
+  object ItmGrid {
+    def easting(key: Column): Column = lit(150000.0) + (key % 20).cast("double") * 5000.0
+    def northing(key: Column): Column = lit(450000.0) + (key % 25).cast("double") * 10000.0
+
+    /** Every grid cell as (easting, northing): the coordinate domain of
+      * [[graft.operators.GeoProjection.withWgs84]] for rows placed by
+      * [[easting]] and [[northing]] on non-negative keys. */
+    def domain(spark: SparkSession): DataFrame = spark.range(20L * 25L).select(
+      easting(col("id")).as("easting"),
+      (lit(450000.0) + expr("id div 20").cast("double") * 10000.0).as("northing"))
+  }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 /** EPSG:2039 (Israel 1993 / Israeli TM Grid) <-> WGS84 geographic
   * coordinates — the projection step the reference performs with pyproj in
@@ -151,86 +152,45 @@ object GeoMath {
 
 /** DataFrame-level wrapper for the projection. */
 object GeoProjection {
-  import org.apache.spark.sql.SparkSession
 
-  /** Adds [lon, lat] WGS84 geometry from ITM easting/northing columns.
+  /** Adds [lon, lat] WGS84 geometry as `outCol` from ITM easting/northing
+    * columns of `df`.
     *
-    * The projection math runs over the DISTINCT coordinate pairs only
-    * (branch sites ≪ card rows — the reference's entity graph has a few
-    * thousand locations under millions of cards), and a broadcast join
-    * maps the tiny lookup back onto the row stream. The typed
-    * mapPartitions pass therefore touches thousands of rows, not the
-    * full fact table, and — unlike the old in-stream form — the main
-    * pipeline keeps whole-stage codegen and column pruning across the
-    * geo stage (round-2 VERDICT finding #4's pattern, applied here).
-    * Join equality on doubles is exact: both sides carry the same
-    * computed values bit-for-bit. Null coordinates yield null geometry
-    * (left join) instead of an executor NPE. */
-  def withWgs84(spark: SparkSession, df: DataFrame, eastingCol: String, northingCol: String,
-                outCol: String = "geometry"): DataFrame = {
-    val coords = df.select(col(eastingCol).as("__graft_e"), col(northingCol).as("__graft_n"))
-      .filter(col("__graft_e").isNotNull && col("__graft_n").isNotNull)
-      .distinct()
-    joinProjected(df, eastingCol, northingCol, outCol, coords)
-  }
-
-  /** [[withWgs84]] with a caller-supplied coordinate DOMAIN (r11
-    * optimization round, measured): the default form derives the distinct
-    * coordinate pairs from `df` itself, which re-runs df's WHOLE upstream
-    * lineage as a second plan arm just to enumerate a coordinate set the
-    * caller often knows in closed form (q64/q65: the full branch pipeline
-    * ran twice — half the queries' ~115-145 MB shuffle; guide §2.4
-    * "remove shuffles outright"). `domain` must contain every non-null
-    * (easting, northing) pair occurring in `df` — extra pairs are
-    * harmless (unmatched left-join rows on the broadcast side). Same
-    * join, same math, bit-identical output. */
-  def withWgs84(spark: SparkSession, df: DataFrame, eastingCol: String, northingCol: String,
+    * The projection math runs once per distinct pair of the caller's
+    * coordinate `domain` (a frame with columns named `eastingCol` and
+    * `northingCol`), and a broadcast left join maps that small lookup back
+    * onto `df`. The row stream keeps whole-stage codegen and column
+    * pruning, and a static domain makes this a stream-static join, legal
+    * on a stream. Join equality on doubles is exact: both sides carry the
+    * same values bit-for-bit.
+    *
+    * Contract: `domain` must contain every non-null (easting, northing)
+    * pair occurring in `df`; a pair it lacks gets null geometry. Extra
+    * pairs are harmless (unmatched rows on the broadcast side). Null
+    * coordinates yield null geometry. */
+  def withWgs84(df: DataFrame, eastingCol: String, northingCol: String,
                 outCol: String, domain: DataFrame): DataFrame = {
     val coords = domain
       .select(col(eastingCol).as("__graft_e"), col(northingCol).as("__graft_n"))
       .filter(col("__graft_e").isNotNull && col("__graft_n").isNotNull)
       .distinct()
-    joinProjected(df, eastingCol, northingCol, outCol, coords)
-  }
-
-  private def joinProjected(df: DataFrame, eastingCol: String, northingCol: String,
-                            outCol: String, coords: DataFrame): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(coords.schema.fields :+
-      org.apache.spark.sql.types.StructField(
-        outCol, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
+    val schema = StructType(coords.schema.fields :+ StructField(outCol, ArrayType(DoubleType)))
     val projected = coords.mapPartitions { rows =>
       rows.map { r =>
         val geom = GeoMath.itmToWgs84(r.getDouble(0), r.getDouble(1))
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ geom.toSeq)
+        Row.fromSeq(r.toSeq :+ geom.toSeq)
       }
-    }(enc)
+    }(Encoders.row(schema))
     df.join(broadcast(projected),
         col(eastingCol) === col("__graft_e") && col(northingCol) === col("__graft_n"),
         "left")
       .drop("__graft_e", "__graft_n")
   }
 
-  /** Streaming-legal PER-ROW variant: the distinct+broadcast form above
-    * aggregates, which a stream cannot do mid-plan — here every row
-    * projects its own coordinates in one stateless typed pass (null
-    * coords → null geometry). Same math, same outputs bit-for-bit; use
-    * on streams, or in batch when coordinates are near-unique anyway. */
-  def withWgs84PerRow(df: DataFrame, eastingCol: String, northingCol: String,
-                      outCol: String = "geometry"): DataFrame = {
-    val eIdx = df.schema.fieldIndex(eastingCol)
-    val nIdx = df.schema.fieldIndex(northingCol)
-    val schema = org.apache.spark.sql.types.StructType(df.schema.fields :+
-      org.apache.spark.sql.types.StructField(
-        outCol, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val geom =
-          if (r.isNullAt(eIdx) || r.isNullAt(nIdx)) null
-          else GeoMath.itmToWgs84(r.getDouble(eIdx), r.getDouble(nIdx)).toSeq
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ geom)
-      }
-    }(enc)
-  }
+  /** The reference's fixed-format point id (helpers.py:57 `calc_point_id`):
+    * each coordinate of a [lon, lat] geometry as `%08.5f` with the dot
+    * stripped, longitude first. */
+  def pointId(geometry: Column): Column = concat(
+    translate(format_string("%08.5f", element_at(geometry, 1)), ".", ""),
+    translate(format_string("%08.5f", element_at(geometry, 2)), ".", ""))
 }

@@ -8,10 +8,8 @@ import org.apache.spark.sql.functions._
   * lookup + ITM→WGS84 + accuracy gate, google fallthrough with the
   * quality mapping and city ladder, NOT_FOUND with partial retention,
   * and the address cleanup. One realization serves BATCH (q140) and
-  * STREAMING: every step is a broadcast lookup or a per-row projection,
-  * so the cascade is fully streaming-legal with ZERO state — the only
-  * difference is the coordinate projection (batch: distinct+broadcast
-  * join; stream: the per-row variant, since distinct aggregates).
+  * STREAMING: every step is a broadcast lookup against a static frame,
+  * so on a stream the cascade is stream-static joins with ZERO state.
   *
   * Input contracts (column names fixed):
   *  - rows: custkey, keyword, addr_n, rev_cand, is_national, is_plus
@@ -30,16 +28,15 @@ object Geocode {
   val AccurateTypes = Seq("ROOFTOP", "RANGE_INTERPOLATED", "STREET_MID_POINT",
     "ADDR_V1", "ADDRESS_POINT", "ADDRESS")
 
-  def cascade(rows: DataFrame, gm: DataFrame, goog: DataFrame,
-              perRowProjection: Boolean = false): DataFrame = {
+  def cascade(rows: DataFrame, gm: DataFrame, goog: DataFrame): DataFrame = {
     val cn = col("cn")
     val j1 = rows.join(broadcast(gm), col("addr_n") === cn, "left")
       .withColumn("gm_hit", !col("is_national") && !col("is_plus") && cn.isNotNull)
       .withColumn("e_itm", when(col("gm_hit"), col("gx")))
       .withColumn("n_itm", when(col("gm_hit"), col("gy")))
-    val proj =
-      if (perRowProjection) GeoProjection.withWgs84PerRow(j1, "e_itm", "n_itm", "geom")
-      else GeoProjection.withWgs84(rows.sparkSession, j1, "e_itm", "n_itm", "geom")
+    // every non-null (e_itm, n_itm) is some gm row's (gx, gy)
+    val proj = GeoProjection.withWgs84(j1, "e_itm", "n_itm", "geom",
+      gm.select(col("gx").as("e_itm"), col("gy").as("n_itm")))
     val j2 = proj.join(broadcast(goog), col("keyword") === col("gkey"), "left")
     val gmAcc = trim(replace(col("dl"), lit("NEW"), lit("")), "_")
     val gmAccOk = gmAcc.isin(AccurateTypes: _*)

@@ -54,16 +54,18 @@ object CardPipeline {
     // orders scan). On a many-split corpus scan the spread is a no-op and
     // the aggregate keeps its own exchange — same plan as before.
     //
-    // r12 (guide §2.3 "shuffle fewer bytes" / §8 "decide with small rows,
-    // move big rows once"): the merge used to run AFTER the dimension
-    // join, so its exchange + min_by sort carried the whole org payload
-    // (name, kind, balance, short name). The dedup's keys and ordering
-    // derive from ORDERS columns alone, and (branch_date, branch_id) is a
-    // total order (branch_id is the orders PK), so the kept row is the
-    // same physical orders row either way — merging FIRST and attaching
-    // the broadcast dimension payload to the survivors is row-for-row
-    // identical (even under a branch_key hash collision the winner's own
-    // organization_id fetches the winner's own payload).
+    // The merge runs BEFORE the dimension join, so its exchange and
+    // min_by sort carry orders columns only, not the org payload. The
+    // reference merges after the join; the two orders keep the same rows
+    // when every merge group is wholly joinable or wholly orphaned (an
+    // organization_id with no customer row). branch_key hashes
+    // organization_id, so a group shares one organization and the inner
+    // join keeps or drops it whole, merge count included. They differ
+    // only if the 8-hex-char branch_keys of two organizations collide and
+    // one of them is an orphan: merging first may then pick the orphan's
+    // row and drop the group, where the reference keeps the joinable row.
+    // (branch_date, branch_id) is a total order (branch_id is the orders
+    // PK), so the kept row is otherwise the same orders row either way.
     val merged = Relational.dedupKeepFirstAggCounted(
       branches
         .withColumn("branch_key",
@@ -151,28 +153,13 @@ object CardPipeline {
 
     // Geo step (to_dp.py:875 + helpers.py:57): project branch coordinates
     // and derive the fixed-format point_id; national services collapse to
-    // the sentinel key like the reference.
-    val withCoords = unique
-      .withColumn("easting",
-        lit(150000.0) + (col("organization_id") % 20).cast("double") * 5000.0)
-      .withColumn("northing",
-        lit(450000.0) + (col("branch_id") % 25).cast("double") * 10000.0)
-    // r11 optimization (measured): pass the CLOSED-FORM coordinate domain
-    // — easting/northing derive from (organization_id % 20, branch_id % 25),
-    // so the 500-cell grid enumerates every pair that can occur. The
-    // default withWgs84 derived the distinct pairs from the card frame
-    // itself, re-running the whole branch pipeline as a second plan arm
-    // (q64/q65 plans carried the orders⋈customer join + both dedup
-    // exchanges TWICE — about half their shuffle volume). Same left join
-    // against the same projected pairs, bit-identical geometry.
-    val coordDomain = spark.range(20L * 25L).select(
-      (lit(150000.0) + (col("id") % 20).cast("double") * 5000.0).as("easting"),
-      (lit(450000.0) + expr("id div 20").cast("double") * 10000.0).as("northing"))
-    val withGeo = GeoProjection.withWgs84(spark, withCoords, "easting", "northing",
-      "branch_geometry", coordDomain)
-    val pointId = concat(
-      translate(format_string("%08.5f", element_at(col("branch_geometry"), 1)), ".", ""),
-      translate(format_string("%08.5f", element_at(col("branch_geometry"), 2)), ".", ""))
+    // the sentinel key like the reference. The coordinates come from the
+    // synthetic grid, so the grid is the projection's coordinate domain.
+    val withGeo = GeoProjection.withWgs84(
+      unique
+        .withColumn("easting", Tables.ItmGrid.easting(col("organization_id")))
+        .withColumn("northing", Tables.ItmGrid.northing(col("branch_id"))),
+      "easting", "northing", "branch_geometry", Tables.ItmGrid.domain(spark))
 
     val result = withGeo
       .withColumn("national_service", col("organization_id") % 10 === 0)
@@ -181,7 +168,8 @@ object CardPipeline {
       // reference's bbox sanity gate before point derivation)
       .withColumn("point_id",
         when(col("national_service"), lit("national_service"))
-          .when(F.validGeometry(col("branch_geometry")), pointId))
+          .when(F.validGeometry(col("branch_geometry")),
+            GeoProjection.pointId(col("branch_geometry"))))
       // select_address (to_dp.py:231): first preference-ordered field
       // passing the no-English validation (helpers.py:79). The candidates
       // derive so every branch executes: a curated Hebrew address for

@@ -519,8 +519,7 @@ object ConnectorQueries {
          |""".stripMargin
     } { (s, dir) =>
       val (rows, gm, goog) = geocodeInputs(s, dir)
-      // Cascade core shared with the STREAMING twin (operators/Geocode):
-      // batch uses the distinct+broadcast coordinate projection.
+      // Cascade core shared with the STREAMING twin (operators/Geocode).
       graft.operators.Geocode.cascade(rows, gm, goog)
     },
 

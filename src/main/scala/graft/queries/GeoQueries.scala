@@ -62,9 +62,9 @@ object GeoQueries {
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
-    // q43: geo clustering over projected coordinates. Plan: one
-    // mapPartitions pass for the projection math (a handful of
-    // transcendentals per row — compute-trivial), then two key-partitioned
+    // q43: geo clustering over projected coordinates. Plan: the
+    // projection math runs once per cell of the 500-cell grid domain and
+    // broadcasts back onto the customer rows, then two key-partitioned
     // aggregations on point_id (record rollup + category mode); point_id
     // is high-cardinality at scale so both shuffles stay balanced.
     "q43_geo_points" -> QueryDef.of(
@@ -113,19 +113,11 @@ object GeoQueries {
          |  a.branch_location_accurate, a.records
          |FROM agg a JOIN md m ON a.point_id = m.point_id AND m.rn = 1
          |""".stripMargin) { (s, dir) =>
-      val withCoords = Tables.customer(s, dir)
-        .withColumn("easting", lit(150000.0) + (col("c_custkey") % 20).cast("double") * 5000.0)
-        .withColumn("northing", lit(450000.0) + (col("c_nationkey") % 25).cast("double") * 10000.0)
-      // r11: closed-form 20×25 coordinate domain — see CardPipeline's
-      // coordDomain note (kills the second customer-scan plan arm).
-      val coordDomain = s.range(20L * 25L).select(
-        (lit(150000.0) + (col("id") % 20).cast("double") * 5000.0).as("easting"),
-        (lit(450000.0) + expr("id div 20").cast("double") * 10000.0).as("northing"))
-      val projected = GeoProjection.withWgs84(s, withCoords, "easting", "northing",
-        "geometry", coordDomain)
-      val pointId = concat(
-        translate(format_string("%08.5f", element_at(col("geometry"), 1)), ".", ""),
-        translate(format_string("%08.5f", element_at(col("geometry"), 2)), ".", ""))
+      val projected = GeoProjection.withWgs84(
+        Tables.customer(s, dir)
+          .withColumn("easting", Tables.ItmGrid.easting(col("c_custkey")))
+          .withColumn("northing", Tables.ItmGrid.northing(col("c_nationkey"))),
+        "easting", "northing", "geometry", Tables.ItmGrid.domain(s))
       // Record payload compaction (to_mapbox.py:89 preprocess_field + the
       // tile-size concern the records array exists for): the record keeps
       // only non-null, non-empty fields — concat_ws SKIPS null entries,
@@ -147,7 +139,7 @@ object GeoQueries {
         concat(lit("geometry="), format_string("%.5f,%.5f",
           element_at(col("geometry"), 1), element_at(col("geometry"), 2))))
       val pts = projected.select(
-        pointId.as("point_id"),
+        GeoProjection.pointId(col("geometry")).as("point_id"),
         col("c_custkey"), col("c_name"), col("c_mktsegment"), col("c_nationkey"), col("c_acctbal"),
         record.as("record"))
       // ONE pass over the projected rows: partial aggregates per

@@ -1,6 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
+import scala.util.Using
+
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.F
+import graft.operators.Relational
 import graft.pipelines.CardPipeline
 
 class CardPipelineSpec extends SpecBase {
@@ -76,5 +84,51 @@ class CardPipelineSpec extends SpecBase {
     val (pKept, pDropped) = byName("Processing: Cards: No Point")
     assert(pKept == cards.filter($"point_id".isNotNull).count())
     assert(pKept + pDropped == nCards)
+  }
+
+  test("orphan organizations: cards and branch stat match the merge-after-join order") {
+    // sf0.001 with every c_custkey % 7 == 0 customer removed: their
+    // orders reference no organization
+    val dir = Files.createTempDirectory("graft_orphan_orgs")
+    try {
+      Tables.customer(spark, SfDir).filter($"c_custkey" % 7 =!= 0)
+        .write.parquet(dir.resolve("customer.parquet").toString)
+      Seq("orders", "lineitem").foreach { t =>
+        Files.copy(Paths.get(SfDir, s"$t.parquet"), dir.resolve(s"$t.parquet"))
+      }
+      val orders = Tables.orders(spark, dir.toString)
+      val joinable = orders.join(Tables.customer(spark, dir.toString),
+        $"o_custkey" === $"c_custkey", "left_semi")
+      val nJoinable = joinable.count()
+      assert(nJoinable < orders.count(), "the fixture must hold orphan orders")
+
+      // the reference's order: inner join first, then keep the first row
+      // per branch_key
+      val refBranches = Relational.dedupKeepFirst(
+        joinable.select($"o_orderkey".as("branch_id"), $"o_custkey".as("organization_id"),
+          $"o_orderdate".as("branch_date"),
+          F.hashKey($"o_custkey", $"o_orderstatus", $"o_orderpriority").as("branch_key")),
+        keys = Seq($"branch_key"), order = Seq($"branch_date", $"branch_id"))
+        .withColumn("organization_branch_count",
+          count(lit(1)).over(Window.partitionBy($"organization_id")))
+      val refCards = Tables.lineitem(spark, dir.toString)
+        .select($"l_orderkey".as("branch_id"), $"l_linenumber".as("service_seq"))
+        .join(refBranches, "branch_id")
+        .select(F.hashKey($"branch_key", F.hashKey($"branch_id", $"service_seq")).as("card_id"),
+          $"branch_id", $"organization_id", $"organization_branch_count")
+        .distinct()
+
+      val (cards, stats) = CardPipeline.cardsWithStats(spark, dir.toString)
+      val got = cards.select($"card_id", $"branch_id", $"organization_id",
+        $"organization_branch_count").collect().toSeq
+      val want = refCards.collect().toSeq
+      assert(got.size == want.size)
+      assert(got.toSet == want.toSet)
+      val branchStat = stats.filter($"stat" === "Processing: Branches: Duplicate Branch").head()
+      assert(branchStat.getAs[Long]("kept") + branchStat.getAs[Long]("dropped") == nJoinable)
+    } finally {
+      CheckpointRegistry.releaseAll()
+      Using.resource(Files.walk(dir))(_.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_)))
+    }
   }
 }

@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.spark.sql.DataFrame
 import graft.operators.{GeoMath, GeoProjection}
 
 class GeoProjectionSpec extends SpecBase {
@@ -40,12 +45,42 @@ class GeoProjectionSpec extends SpecBase {
 
   test("withWgs84 projects a DataFrame column pair distributedly") {
     import spark.implicits._
-    val df = Seq((1L, 179254.0, 664694.0), (2L, 219529.584, 626907.390))
+    val rows = Seq[(Long, Option[Double], Option[Double])](
+      (1L, Some(179254.0), Some(664694.0)), (2L, Some(219529.584), Some(626907.390)),
+      (3L, Some(179254.0), Some(664694.0)), (4L, None, Some(664694.0)),
+      (5L, Some(179254.0), None))
       .toDF("id", "easting", "northing")
-    val out = GeoProjection.withWgs84(spark, df, "easting", "northing").orderBy("id").collect()
-    val geom = out.head.getSeq[Double](3)
-    assert(geom.length == 2 && geom(1) > 31.9 && geom(1) < 32.2)
-    // geometry validation from the reference (helpers.py:69): lon 33-37, lat 29.3-33.3
-    assert(geom(0) > 33 && geom(0) < 37)
+    def project(domain: DataFrame): Map[Long, Seq[Double]] =
+      GeoProjection.withWgs84(rows, "easting", "northing", "geometry", domain)
+        .collect().map(r => r.getAs[Long]("id") -> r.getAs[Seq[Double]]("geometry")).toMap
+    // GeoMath is the per-row reference; a null coordinate gets null geometry
+    val expected = rows.collect().map { r =>
+      val geom = if (r.isNullAt(1) || r.isNullAt(2)) null
+        else GeoMath.itmToWgs84(r.getDouble(1), r.getDouble(2)).toSeq
+      r.getLong(0) -> geom
+    }.toMap
+    val exact = Seq((179254.0, 664694.0), (219529.584, 626907.390)).toDF("easting", "northing")
+    assert(project(exact) == expected)
+    assert(expected(4L) == null && expected(5L) == null)
+    // pairs absent from the data change no output
+    val wider = exact.union(Tables.ItmGrid.domain(spark))
+      .union(Seq((179254.0, 664694.0)).toDF("easting", "northing"))
+    assert(project(wider) == expected)
+  }
+
+  test("no file under src/main projects ITM coordinates or builds a point id outside GeoProjection") {
+    // oracle SQL renders point ids with printf, which this does not match
+    val projectionCall = """itmToWgs84|format_string\(\s*"%08\.5f"""".r
+    val sources = Using.resource(Files.walk(Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    assert(sources.nonEmpty, "the guard must see the sources")
+    val offenders = for {
+      f <- sources if f.getFileName.toString != "GeoProjection.scala"
+      text = Files.readString(f)
+      m <- projectionCall.findAllMatchIn(text)
+    } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+    assert(offenders.isEmpty,
+      s"projections and point ids must go through GeoProjection:\n${offenders.mkString("\n")}")
   }
 }

@@ -1224,18 +1224,16 @@ class StreamingSpec extends SpecBase {
   }
 
   test("streaming geocode cascade matches batch q140 across micro-batch boundaries") {
-    // Every cascade step is a broadcast lookup or a per-row projection —
-    // ZERO streaming state; the only realization difference is the
-    // coordinate projection (per-row instead of distinct+broadcast,
-    // which would aggregate mid-stream). Same math, so results must be
-    // row-identical under any micro-batch split.
+    // Every cascade step, the coordinate projection included, is a
+    // broadcast lookup against a static frame — ZERO streaming state, and
+    // the same code path as batch q140 — so results must be row-identical
+    // under any micro-batch split.
     implicit val sqlCtx = spark.sqlContext
     val (rowsB, gm, goog) = graft.queries.ConnectorQueries.geocodeInputs(spark, SfDir)
     val all = rowsB.select($"custkey", $"addr_n", $"keyword", $"rev_cand",
       $"is_national", $"is_plus").as[GeoRow].collect().toSeq.sortBy(_.custkey)
     val stream = MemoryStream[GeoRow]
-    val out = graft.operators.Geocode.cascade(
-      stream.toDF(), gm, goog, perRowProjection = true)
+    val out = graft.operators.Geocode.cascade(stream.toDF(), gm, goog)
     val query = out.writeStream.format("memory").queryName("geocode_stream_test")
       .outputMode("append").start()
     try {
