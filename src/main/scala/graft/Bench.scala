@@ -3,13 +3,18 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.GraftListenerBusAccess
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at the given scale factor
-  * and prints ONE JSON line. A first untimed pass absorbs JVM/codegen/
-  * catalog warmup so the timed pass measures steady-state throughput (the
-  * number that scales to cluster runs).
+  * and prints ONE JSON line. A first untimed pass warms the JVM, the
+  * catalog and file listing. It does not leave the timed runs' compiled
+  * classes behind: the 179 queries compile far more whole-stage classes
+  * than the codegen cache holds, so most of a query's warmup classes are
+  * evicted before its timed runs. The profile's `compiles` field counts
+  * the classes the first timed run compiled, which the second timed run
+  * then finds in the cache.
   *
   * Besides wall seconds (load-SENSITIVE on a shared box — see the
   * sandbox-drift protocol in BASELINE.md) each query also records the
@@ -44,7 +49,12 @@ object Bench {
   }
 
   private case class QueryProfile(sec: Double, shuffleReadBytes: Long,
-                                  shuffleWriteBytes: Long, taskTimeMs: Long, peakMemBytes: Long)
+                                  shuffleWriteBytes: Long, taskTimeMs: Long, peakMemBytes: Long,
+                                  compiles: Long)
+
+  /** Whole-stage classes compiled so far in this JVM (cache misses of
+    * Spark's codegen cache; local mode compiles driver and tasks here). */
+  private def compiledClasses(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def round3(v: Double): Double = math.rint(v * 1000.0) / 1000.0
 
@@ -79,7 +89,9 @@ object Bench {
     // long wall time and ±20% noise is acceptable for exponents.
     val quick = sys.env.get("SPARK_GRAFT_QUICK").contains("1")
 
-    // Warmup: run everything once (exercises codegen + file listing).
+    // Warmup: run everything once (JIT, catalog, file listing). Its
+    // compiled classes mostly do not survive to a query's timed runs; see
+    // the `compiles` profile field.
     if (!quick) queries.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }
@@ -88,7 +100,8 @@ object Bench {
     // box with other work; min is the honest throughput estimate). A
     // failing query records -1, never a fake near-zero "fast" time.
     // The metric deltas come from the FIRST timed run — bytes and task
-    // structure are plan properties, identical across repeats.
+    // structure are plan properties, identical across repeats. So does
+    // `compiles`: the second run finds that run's classes in the cache.
     def timedRun(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { run(fn); (System.nanoTime() - t0) / 1e9 }
@@ -101,7 +114,9 @@ object Bench {
       GraftListenerBusAccess.drain(spark.sparkContext)
       listener.resetPeak()
       val before = listener.snapshot()
+      val compilesBefore = compiledClasses()
       val t1 = timedRun(name, fn)
+      val compiles = compiledClasses() - compilesBefore
       GraftListenerBusAccess.drain(spark.sparkContext)
       val afterFirst = listener.snapshot()
       val t2 = if (quick) t1 else timedRun(name, fn)
@@ -109,10 +124,10 @@ object Bench {
       // A failed run's partial task metrics are NOT a plan profile —
       // recording them would poison the bytes-first regression protocol
       // (BASELINE.md r7). Zero them so -1/0 reads unambiguously "failed".
-      if (sec < 0) name -> QueryProfile(sec, 0L, 0L, 0L, 0L)
+      if (sec < 0) name -> QueryProfile(sec, 0L, 0L, 0L, 0L, 0L)
       else name -> QueryProfile(sec,
         afterFirst._1 - before._1, afterFirst._2 - before._2,
-        afterFirst._3 - before._3, afterFirst._4)
+        afterFirst._3 - before._3, afterFirst._4, compiles)
     }
 
     // The round driver keeps only the last ~2000 chars of stdout and
@@ -141,7 +156,8 @@ object Bench {
     val profileOf = results.map { case (k, p) =>
       "\"" + k + "\":{\"sec\":" + round3(p.sec) +
         ",\"shufR\":" + p.shuffleReadBytes + ",\"shufW\":" + p.shuffleWriteBytes +
-        ",\"taskMs\":" + p.taskTimeMs + ",\"peakMem\":" + p.peakMemBytes + "}"
+        ",\"taskMs\":" + p.taskTimeMs + ",\"peakMem\":" + p.peakMemBytes +
+        ",\"compiles\":" + p.compiles + "}"
     }.mkString("{", ",", "}")
     // Failed runs record -1.0 as their sentinel; summing that would let
     // a crashing query LOWER the suite total (a regression could read as

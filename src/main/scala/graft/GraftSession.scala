@@ -11,6 +11,26 @@ import org.apache.spark.sql.SparkSession
   * splits skewed ones, which is the posture we want at 100 TB.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries` for every graft session.
+    *
+    * Spark caches compiled whole-stage classes per JVM, keyed by their
+    * generated source, and keeps 100 by default. graft's working set is
+    * larger. Counted at sf0.1 on 4 cores, a cold pass of the dedup family
+    * (q66, q67, q130) compiles 124-128 distinct classes and the publish
+    * flow (q65, q43, q18, q35) 109-120. At 100 entries each repeat pass
+    * evicts and recompiles most of them (68-100 per dedup pass, about 90
+    * per publish pass). Each recompile defines a new class, which starts
+    * interpreted in the JIT: q66's `jaccardPairs` probe stage read
+    * 0.9-1.3 s per pass when it was recompiled and 0.2-0.3 s when its
+    * class survived. At 1000 entries repeat passes compile nothing.
+    *
+    * The setting is static. `CodeGenerator` sizes its cache once, from the
+    * first session in the JVM that compiles, and each executor JVM sizes
+    * its own cache when its first task compiles. A JVM that runs each plan
+    * once (a cold daily ETL) gains nothing from it.
+    */
+  val CodegenCacheEntries: Int = 1000
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     builder(Some(s"local[$cores]"), cores).getOrCreate()
 
@@ -35,6 +55,8 @@ object GraftSession {
       // here are small arrays; keep hashing. On a memory-tight cluster
       // this is the first knob to revisit.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
+      // sized to graft's working set; see CodegenCacheEntries
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // catalog tables (Sources.dumpToTable) land outside the repo; a real
       // deployment points this at shared storage
       .config("spark.sql.warehouse.dir",
