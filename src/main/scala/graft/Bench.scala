@@ -69,9 +69,7 @@ object Bench {
 
     // Optional comma-separated filter for local bisection; prefixes work:
     // SPARK_GRAFT_ONLY=q23,q25_ngram_jaccard
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    val queries = SparkEntry.selectedQueries(sys.env.get("SPARK_GRAFT_ONLY")).toSeq.sortBy(_._1)
 
     // Full materialization through the noop sink: unlike count(), Catalyst
     // cannot drop final projections/sorts, so projection-heavy queries are

@@ -37,6 +37,20 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map { case (name, d) => name -> d.build }
 
+  /** The registered queries a `SPARK_GRAFT_ONLY` value selects (the
+    * Bench and Verify mains' local-iteration filter): comma-separated
+    * name prefixes, each trimmed. Unset or blank selects every query. A
+    * prefix that matches no query throws, so a typo never reads as a
+    * green run over nothing. */
+  def selectedQueries(only: Option[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val prefixes = only.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val qs = queries
+    val unmatched = prefixes.filterNot(p => qs.keys.exists(_.startsWith(p)))
+    require(unmatched.isEmpty,
+      s"SPARK_GRAFT_ONLY prefixes match no registered query: ${unmatched.mkString(", ")}")
+    if (prefixes.isEmpty) qs else qs.filter { case (n, _) => prefixes.exists(n.startsWith) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

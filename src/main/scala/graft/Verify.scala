@@ -14,13 +14,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (same contract as Bench): comma-separated
-    // name prefixes. The driver never sets it, so its gate stays full.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith))
-    }
+    // Local-iteration filter (same parser as Bench): comma-separated
+    // name prefixes. Unset, the gate stays full.
+    val selected = SparkEntry.selectedQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

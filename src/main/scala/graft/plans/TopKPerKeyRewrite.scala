@@ -47,11 +47,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 object TopKPerKeyRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** Kill switch, read per-invocation so tests and profiling runs can
-    * pin the un-rewritten plan (the NAIVE window encoding, the baseline
-    * of the TopKPerKey measurements in BASELINE.md). */
-  val EnabledKey = "spark.graft.topk.rewrite"
-
   /** Rewrites only for k ≤ this: the exec node holds one k-row heap per
     * key per task, so a huge literal k (paging through most of each
     * group) belongs on the sort-based builtin path, not on heaps. */
@@ -88,24 +83,21 @@ object TopKPerKeyRewrite extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString(EnabledKey, "true") != "true") return plan
-    plan.transform {
-      case p @ Project(projectList, Filter(cond,
-          Window(Seq(alias @ Alias(WindowExpression(RowNumber(), spec), _)),
-            part, ord, child, _)))
-          if part.nonEmpty && ord.nonEmpty &&
-            part.forall(_.deterministic) && ord.forall(_.deterministic) &&
-            // float/double partition keys stay on the Window path: the
-            // builtin plan normalizes them (NormalizeFloatingNumbers runs
-            // AFTER this batch and does not know TopKPerKey), while the
-            // node's byte-wise UnsafeRow key map would split NaN bit
-            // patterns / -0.0 vs 0.0 into separate groups.
-            !part.exists(e => hasFloatingPoint(e.dataType)) &&
-            sameSpec(spec, part, ord) &&
-            !projectList.exists(_.references.contains(alias.toAttribute)) =>
-        rewrite(p, projectList, cond, alias.toAttribute, part, ord, child).getOrElse(p)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case p @ Project(projectList, Filter(cond,
+        Window(Seq(alias @ Alias(WindowExpression(RowNumber(), spec), _)),
+          part, ord, child, _)))
+        if part.nonEmpty && ord.nonEmpty &&
+          part.forall(_.deterministic) && ord.forall(_.deterministic) &&
+          // float/double partition keys stay on the Window path: the
+          // builtin plan normalizes them (NormalizeFloatingNumbers runs
+          // AFTER this batch and does not know TopKPerKey), while the
+          // node's byte-wise UnsafeRow key map would split NaN bit
+          // patterns / -0.0 vs 0.0 into separate groups.
+          !part.exists(e => hasFloatingPoint(e.dataType)) &&
+          sameSpec(spec, part, ord) &&
+          !projectList.exists(_.references.contains(alias.toAttribute)) =>
+      rewrite(p, projectList, cond, alias.toAttribute, part, ord, child).getOrElse(p)
   }
 
   private def rewrite(original: Project, projectList: Seq[org.apache.spark.sql.catalyst

@@ -150,10 +150,8 @@ object DocumentStreams {
     * labels cover exactly the ids below it.
     *
     * Requires monotone doc ids across batches (q130's growing-corpus
-    * contract) — and that same contract gives REPLAY SAFETY for free:
-    * rows at-or-below the published max id are already clustered, so a
-    * crashed batch's redelivery filters to nothing new and republishes
-    * an identical snapshot. Publication uses the pointer-file snapshot
+    * contract); redelivery, replay and the crash windows follow
+    * [[MonotoneIngest]]. Publication uses the pointer-file snapshot
     * protocol (readers never see a half-written clustering; crash
     * mid-publish leaves the previous snapshot live).
     *
@@ -162,81 +160,42 @@ object DocumentStreams {
     * (by induction on q130's per-step equality).
     */
   def clusterMaintenanceSink(outDir: String, threshold: Double = 0.9)
-                            (batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val b = batch.select(col("doc_id").cast("long"), col("text"))
-    // Corpus rows live OUTSIDE the snapshots, appended ONCE per batch
-    // under docs/batch=<id>; a one-row docmax/batch=<id> manifest rides
-    // along so the replay guard reads #batches rows, not the corpus.
-    // The snapshot protocol covers only the slim (doc_id, label)
-    // artifact plus a one-row meta carrying the clustering's COVERAGE
-    // boundary. (Recomputing every doc's signature per batch is the
-    // documented local-mode posture — Dedup.incrementalMinhashLabels'
-    // scale path materializes the band index instead.)
-    val docsRoot = s"$outDir/docs"
-    val maxRoot = s"$outDir/docmax"
-    def maxDocSoFar: Option[Long] =
-      if (!EventStreams.hasParquetFile(maxRoot)) None
-      else {
-        val r = spark.read.parquet(maxRoot).agg(max(col("max_id"))).head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
+                            (batch: DataFrame, batchId: Long): Unit =
+    MonotoneIngest(outDir, batchId, batch.select(col("doc_id").cast("long"), col("text"))) { ingest =>
+      import graft.operators.Dedup
+      val spark = batch.sparkSession
+      // Corpus rows live OUTSIDE the snapshots; the snapshot holds only
+      // the slim (doc_id, label) artifact. (Recomputing every doc's
+      // signature per batch is the documented local-mode posture —
+      // Dedup.incrementalMinhashLabels' scale path materializes the band
+      // index instead.)
+      ingest.writeFresh(_.write.mode("overwrite").parquet(ingest.batchPath("docs")))
+      ingest.republishIfBehind { (live, staged) =>
+        val all = spark.read.parquet(s"$outDir/docs").select(col("doc_id"), col("text"))
+        val ids = all.select(col("doc_id").as("id"))
+        val sigs = Dedup.minhashSignatures(all, "doc_id", "text", k = 64, shingleWidth = 3)
+          .transform(graft.CheckpointRegistry.local(_, false)) // referenced by banding AND twice by verify
+        val labels = live match {
+          case Some(snap) =>
+            Dedup.incrementalMinhashLabels(ids, sigs, snap.coverage + 1,
+              spark.read.parquet(s"${snap.dir}/labels"), threshold = threshold)
+          case None => // first publish
+            Dedup.connectedComponents(ids,
+              Dedup.starLinksFromSigs(sigs, threshold = threshold).select(col("id_a"), col("id_b")))
+        }
+        try labels.write.mode("overwrite").parquet(s"$staged/labels")
+        finally {
+          // the CC inside the operator releases its superseded per-round
+          // checkpoints itself, but its RETURNED lineage still reads the
+          // init + final label checkpoints — only THIS sink knows when the
+          // last action over them (and over the signatures) has run; without
+          // the deep release a long-lived stream accumulates checkpoints per
+          // micro-batch until a driver GC (the passage-sink ADVICE shape)
+          graft.CheckpointRegistry.release(labels)
+          graft.CheckpointRegistry.release(sigs)
+        }
       }
-    val maxOld = maxDocSoFar
-    // monotone-id contract doubles as replay idempotence: redelivered
-    // rows are <= maxOld and drop here
-    val fresh = maxOld.map(m => b.filter(col("doc_id") > m)).getOrElse(b)
-    val freshMax: Option[Long] = {
-      val r = fresh.agg(max(col("doc_id"))).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
     }
-    freshMax.foreach { fm =>
-      fresh.write.mode("overwrite").parquet(s"$docsRoot/batch=$batchId")
-      Seq(fm).toDF("max_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$maxRoot/batch=$batchId")
-    }
-    val maxAll: Option[Long] = Seq(maxOld, freshMax).flatten.reduceOption(_ max _)
-    if (maxAll.isEmpty) return // nothing has ever arrived
-    // The clustering's coverage boundary lives in the snapshot's META
-    // row, NOT inferred from the batch: a crash between the docs append
-    // and the publish leaves docs ahead of labels, and on replay `fresh`
-    // is empty — the boundary compare below still sees the gap and
-    // re-clusters the appended-but-unlabeled ids (a fresh-empty early
-    // return here would lose those links FOREVER, since later batches
-    // would treat them as already-clustered).
-    val live = EventStreams.currentSnapshotDir(outDir)
-    val coverage: Option[Long] = live.map { dir =>
-      spark.read.parquet(s"$dir/meta").head().getLong(0)
-    }
-    if (coverage == maxAll) return // snapshot already covers every doc
-    val all = spark.read.parquet(docsRoot).select(col("doc_id"), col("text"))
-    val ids = all.select(col("doc_id").as("id"))
-    val sigs = Dedup.minhashSignatures(all, "doc_id", "text", k = 64, shingleWidth = 3)
-      .transform(graft.CheckpointRegistry.local(_, false)) // referenced by banding AND twice by verify
-    val labels = (live, coverage) match {
-      case (Some(dir), Some(cov)) =>
-        Dedup.incrementalMinhashLabels(ids, sigs, cov + 1,
-          spark.read.parquet(s"$dir/labels"), threshold = threshold)
-      case _ => // first publish
-        Dedup.connectedComponents(ids,
-          Dedup.starLinksFromSigs(sigs, threshold = threshold).select(col("id_a"), col("id_b")))
-    }
-    try EventStreams.stageAndPublish(outDir, batchId) { staged =>
-      labels.write.mode("overwrite").parquet(s"$staged/labels")
-      Seq(maxAll.get).toDF("coverage_max_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staged/meta")
-    } finally {
-      // the CC inside the operator releases its superseded per-round
-      // checkpoints itself, but its RETURNED lineage still reads the
-      // init + final label checkpoints — only THIS sink knows when the
-      // last action over them (and over the signatures) has run; without
-      // the deep release a long-lived stream accumulates checkpoints per
-      // micro-batch until a driver GC (the passage-sink ADVICE shape)
-      graft.CheckpointRegistry.release(labels)
-      graft.CheckpointRegistry.release(sigs)
-    }
-  }
 
   /** foreachBatch CORPUS-BUILD sink — the streaming flagship closing the
     * q88 chain live: wired after [[curateStream]] (gate → watermark-
@@ -253,139 +212,93 @@ object DocumentStreams {
     * manifest merge reads per-batch 16-row deltas, never the corpus).
     *
     * Packing is the one genuinely stateful stage: seq_id/seq_off need
-    * each language's cumulative token total. Under the same monotone
-    * doc-id arrival contract as [[clusterMaintenanceSink]], stored
-    * per-lang base + within-batch cumsum EQUALS batch q88's global
-    * cumulative window, and the contract again doubles as replay
-    * safety: redelivered rows filter out at the docmax guard.
-    *
-    * Crash windows: per-batch artifacts (shard rows, langstate delta,
-    * manifest delta) are deterministic overwrites of their own
-    * `batch=` partition, and the docmax guard is written LAST — a crash
-    * anywhere before it replays the whole batch into identical files; a
-    * crash after it but before the manifest publish is healed by the
-    * coverage check, which republishes from the persisted deltas. State
-    * reads exclude the current batch's partitions so a crashed attempt's
-    * partial writes can never double-count.
+    * each language's cumulative token total. Under the monotone doc-id
+    * arrival contract of [[MonotoneIngest]], stored per-lang base +
+    * within-batch cumsum EQUALS batch q88's global cumulative window.
+    * Replay and crash windows follow [[MonotoneIngest]]: the per-batch
+    * artifacts (shard rows, langstate delta, manifest delta) land before
+    * the commit marker, and a missed manifest publish is republished
+    * from the persisted deltas.
     */
   def corpusBuildSink(evalShingles: DataFrame, outDir: String,
                       holdout: org.apache.spark.sql.Column = col("doc_id") % 10 === 7,
                       seqLen: Int = 512, nShards: Int = 16)
-                     (batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val shardsRoot = s"$outDir/shards"
-    val langRoot = s"$outDir/langstate"
-    val deltaRoot = s"$outDir/manifestdelta"
-    val maxRoot = s"$outDir/docmax"
-    // prior-batches-only reads: a crashed attempt at THIS batch id may
-    // have left partial partitions behind — they are overwritten below,
-    // and must not leak into the bases we continue from. The
-    // parquet-footer guard (not a bare exists()) keeps a crash-orphaned
-    // _temporary-only dir from wedging every replay on schema inference.
-    def priorOnly(root: String): Option[DataFrame] =
-      if (!EventStreams.hasParquetFile(root)) None
-      else Some(spark.read.parquet(root).filter(col("batch") < batchId))
-    val maxOld: Option[Long] = priorOnly(maxRoot).flatMap { df =>
-      val r = df.agg(max(col("max_id"))).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
+                     (batch: DataFrame, batchId: Long): Unit =
+    MonotoneIngest(outDir, batchId,
+        batch.select(col("doc_id").cast("long"), col("lang"), col("text"))) { ingest =>
+      import graft.operators.Dedup
+      val spark = batch.sparkSession
+      import spark.implicits._
+      ingest.writeFresh { fresh =>
+        // q88 stage order on the curated rows: holdout drop, then the
+        // per-doc decontamination probe (broadcast dim side)
+        val kept = fresh.filter(!holdout)
+        val contaminated = kept
+          .select(col("doc_id"),
+            explode(array_distinct(Dedup.shingles(F.tokens(col("text")), 8))).as("sh"))
+          .join(org.apache.spark.sql.functions.broadcast(
+            evalShingles.select(col("sh"))), "sh")
+          .select(col("doc_id")).distinct()
+        val counted = kept.join(contaminated, Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), col("lang"),
+            TextAnalysis.bpeTokenCount(col("text")).as("tokens"))
+        // continue each language's cumulative offset: stored base (tiny,
+        // one row per lang per prior batch) + within-batch cumsum ==
+        // q88's global doc_id-ordered window under monotone arrival.
+        // The within-batch cumsum runs the SAME two-level prefix sum as
+        // batch q70/q88 (r11): a steady-state micro-batch is small, but a
+        // backlog REPLAY delivers a corpus-sized batch, and a per-lang
+        // window would serialize its dominant language in one task at
+        // exactly the moment the pipeline is trying to catch up (the
+        // cached fresh rows keep the totals branch's re-read cheap).
+        val bases = ingest.priorOnly("langstate")
+          .map(_.groupBy(col("lang")).agg(sum(col("delta")).as("base")))
+          .getOrElse(Seq.empty[(String, Long)].toDF("lang", "base"))
+        val packed = graft.operators.PrefixSum.runningSum(counted,
+            Seq("lang"), expr("doc_id div 65536"), Seq(col("doc_id")),
+            col("tokens"), "cum_in")
+          .join(org.apache.spark.sql.functions.broadcast(bases), Seq("lang"), "left")
+          .withColumn("start",
+            coalesce(col("base"), lit(0L)) + col("cum_in") - col("tokens"))
+          .select(col("doc_id"), col("lang"), col("tokens"),
+            floor(col("start") / seqLen.toDouble).cast("long").as("seq_id"),
+            (col("start") % seqLen).cast("long").as("seq_off"))
+          .withColumn("shard",
+            Sampling.docHash32(concat(col("lang"), lit(":"), col("seq_id").cast("string"))) % nShards)
+          .cache()
+        try {
+          // co-locate by shard before the partitioned write (SURVEY
+          // lesson 45): without it every batch fans out to
+          // (#lang-partitions x nShards) files, compounding per batch —
+          // with it each batch leaves at most one file per touched shard
+          packed.repartition(col("shard")).write.mode("overwrite").partitionBy("shard")
+            .parquet(ingest.batchPath("shards"))
+          // coalesce(1): these deltas are ≤ #langs / ≤ nShards rows, and a
+          // single task guarantees a schema-bearing file even when empty
+          packed.groupBy(col("lang")).agg(sum(col("tokens")).as("delta"))
+            .coalesce(1).write.mode("overwrite").parquet(ingest.batchPath("langstate"))
+          packed.groupBy(col("shard"))
+            .agg(count(lit(1)).cast("long").as("n_docs"),
+              sum(col("tokens")).cast("long").as("n_tokens"),
+              sum(Sampling.docHash32(concat(col("doc_id").cast("string"), lit(":"),
+                col("lang"), lit(":"), col("tokens").cast("string"))))
+                .cast("long").as("checksum"))
+            .coalesce(1).write.mode("overwrite").parquet(ingest.batchPath("manifestdelta"))
+        } finally packed.unpersist()
+      }
+      // manifest publish (and the crash-heal republish): fold ALL persisted
+      // per-batch deltas — #batches × ≤ nShards rows, corpus-free
+      ingest.republishIfBehind { (_, staged) =>
+        ingest.all("manifestdelta")
+          .map(_.groupBy(col("shard"))
+            .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+              sum(col("n_tokens")).cast("long").as("n_tokens"),
+              sum(col("checksum")).cast("long").as("checksum")))
+          .getOrElse(Seq.empty[(Long, Long, Long, Long)]
+            .toDF("shard", "n_docs", "n_tokens", "checksum"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$staged/manifest")
+      }
     }
-    // cached: the max aggregate, the contamination branch and the
-    // left-anti counted branch would otherwise each re-run the batch's
-    // upstream (gate + tokenize) lineage
-    val fresh = maxOld.map(m => batch.filter(col("doc_id") > m)).getOrElse(batch)
-      .select(col("doc_id").cast("long"), col("lang"), col("text")).cache()
-    try {
-    val freshMax: Option[Long] = {
-      val r = fresh.agg(max(col("doc_id"))).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-    val maxAll: Option[Long] = Seq(maxOld, freshMax).flatten.reduceOption(_ max _)
-    if (maxAll.isEmpty) return // nothing has ever arrived
-    if (freshMax.isDefined) {
-      // q88 stage order on the curated rows: holdout drop, then the
-      // per-doc decontamination probe (broadcast dim side)
-      val kept = fresh.filter(!holdout)
-      val contaminated = kept
-        .select(col("doc_id"),
-          explode(array_distinct(Dedup.shingles(F.tokens(col("text")), 8))).as("sh"))
-        .join(org.apache.spark.sql.functions.broadcast(
-          evalShingles.select(col("sh"))), "sh")
-        .select(col("doc_id")).distinct()
-      val counted = kept.join(contaminated, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("lang"),
-          TextAnalysis.bpeTokenCount(col("text")).as("tokens"))
-      // continue each language's cumulative offset: stored base (tiny,
-      // one row per lang per prior batch) + within-batch cumsum ==
-      // q88's global doc_id-ordered window under monotone arrival.
-      // The within-batch cumsum runs the SAME two-level prefix sum as
-      // batch q70/q88 (r11): a steady-state micro-batch is small, but a
-      // backlog REPLAY delivers a corpus-sized batch, and a per-lang
-      // window would serialize its dominant language in one task at
-      // exactly the moment the pipeline is trying to catch up (the
-      // upstream `fresh` cache keeps the totals branch's re-read cheap).
-      val bases = priorOnly(langRoot)
-        .map(_.groupBy(col("lang")).agg(sum(col("delta")).as("base")))
-        .getOrElse(Seq.empty[(String, Long)].toDF("lang", "base"))
-      val packed = graft.operators.PrefixSum.runningSum(counted,
-          Seq("lang"), expr("doc_id div 65536"), Seq(col("doc_id")),
-          col("tokens"), "cum_in")
-        .join(org.apache.spark.sql.functions.broadcast(bases), Seq("lang"), "left")
-        .withColumn("start",
-          coalesce(col("base"), lit(0L)) + col("cum_in") - col("tokens"))
-        .select(col("doc_id"), col("lang"), col("tokens"),
-          floor(col("start") / seqLen.toDouble).cast("long").as("seq_id"),
-          (col("start") % seqLen).cast("long").as("seq_off"))
-        .withColumn("shard",
-          Sampling.docHash32(concat(col("lang"), lit(":"), col("seq_id").cast("string"))) % nShards)
-        .cache()
-      try {
-        // co-locate by shard before the partitioned write (SURVEY
-        // lesson 45): without it every batch fans out to
-        // (#lang-partitions x nShards) files, compounding per batch —
-        // with it each batch leaves at most one file per touched shard
-        packed.repartition(col("shard")).write.mode("overwrite").partitionBy("shard")
-          .parquet(s"$shardsRoot/batch=$batchId")
-        // coalesce(1): these deltas are ≤ #langs / ≤ nShards rows, and a
-        // single task guarantees a schema-bearing file even when empty
-        packed.groupBy(col("lang")).agg(sum(col("tokens")).as("delta"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$langRoot/batch=$batchId")
-        packed.groupBy(col("shard"))
-          .agg(count(lit(1)).cast("long").as("n_docs"),
-            sum(col("tokens")).cast("long").as("n_tokens"),
-            sum(Sampling.docHash32(concat(col("doc_id").cast("string"), lit(":"),
-              col("lang"), lit(":"), col("tokens").cast("string"))))
-              .cast("long").as("checksum"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$deltaRoot/batch=$batchId")
-        Seq(freshMax.get).toDF("max_id").coalesce(1)
-          .write.mode("overwrite").parquet(s"$maxRoot/batch=$batchId")
-      } finally packed.unpersist()
-    }
-    // manifest publish (and the crash-heal republish): fold ALL persisted
-    // per-batch deltas — #batches × ≤ nShards rows, corpus-free
-    val live = EventStreams.currentSnapshotDir(outDir)
-    val coverage: Option[Long] = live.map { dir =>
-      spark.read.parquet(s"$dir/meta").head().getLong(0)
-    }
-    if (coverage == maxAll) return // snapshot already covers every doc
-    val manifest =
-      if (!EventStreams.hasParquetFile(deltaRoot))
-        Seq.empty[(Long, Long, Long, Long)]
-          .toDF("shard", "n_docs", "n_tokens", "checksum")
-      else spark.read.parquet(deltaRoot)
-        .groupBy(col("shard"))
-        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("n_tokens"),
-          sum(col("checksum")).cast("long").as("checksum"))
-    EventStreams.stageAndPublish(outDir, batchId) { staged =>
-      manifest.coalesce(1).write.mode("overwrite").parquet(s"$staged/manifest")
-      Seq(maxAll.get).toDF("coverage_max_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staged/meta")
-    }
-    } finally fresh.unpersist()
-  }
 
   /** foreachBatch INCREMENTAL passage-dedup sink — the streaming twin of
     * [[graft.operators.Dedup.duplicatePassages]] (q166). State is a
@@ -401,146 +314,120 @@ object DocumentStreams {
     * copies arrive already knowing their coverage — the incremental
     * contract of the Dolma/CCNet dedup taggers.
     *
-    * Under the monotone doc-id arrival contract (batches cut in
-    * ascending id order — the [[clusterMaintenanceSink]] contract) the
-    * union of `reports` EQUALS batch q166 over the union corpus
+    * Under the monotone doc-id arrival contract of [[MonotoneIngest]]
+    * the union of `reports` EQUALS batch q166 over the union corpus
     * row-for-row: the global corpus-first (min (id, pos)) is then always
     * the first-arriving occurrence. The contract is a REQUIREMENT, not a
-    * preference: the docmax guard that makes redelivery idempotent
-    * cannot tell a replayed row from a never-seen row with a low id, so
-    * an out-of-contract doc (backfill, out-of-order source) is DROPPED —
-    * no report row, no store entry. Backfills go through the batch
-    * operator (or a store rebuild), not this sink.
+    * preference: an out-of-contract doc is dropped (no report row, no
+    * store entry), and replay and crash windows follow [[MonotoneIngest]].
     *
     * Per-batch cost: the store join is batch-windows × store-hashes on
     * `h` — the read side grows with corpus hash cardinality (the same
     * growth a Bloom-filter tagger hides behind false positives; this
     * sink is exact). Store deltas accrue one dir per batch;
     * [[compactPassageStore]] folds them into a `batch=-1` sentinel base
-    * in a fresh pointer-swapped store — operational, not correctness. Replay/crash: docmax is written
-    * LAST; reports/hashes are deterministic overwrites of their own
-    * `batch=` dir, so any crash before the docmax commit replays into
-    * identical files; redelivered rows of a committed batch drop at the
-    * docmax guard; all state reads take only `batch < batchId`
-    * partitions, so a crashed attempt's partials never count. */
+    * in a fresh pointer-swapped store — operational, not correctness. */
   def passageDedupSink(outDir: String, k: Int = 13)
-                      (batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val b = batch.select(col("doc_id").cast("long"), col("text"))
-    val maxRoot = s"$outDir/docmax"
-    val hashesRoot = s"$outDir/hashes"
-    val reportsRoot = s"$outDir/reports"
-    def priorOnly(root: String): Option[DataFrame] =
-      if (!EventStreams.hasParquetFile(root)) None
-      else Some(spark.read.parquet(root).filter(col("batch") < batchId))
-    val maxOld: Option[Long] = priorOnly(maxRoot).flatMap { df =>
-      val r = df.agg(max(col("max_id"))).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
+                      (batch: DataFrame, batchId: Long): Unit =
+    MonotoneIngest(outDir, batchId, batch.select(col("doc_id").cast("long"), col("text"))) { ingest =>
+      ingest.writeFresh { fresh =>
+        import graft.operators.Dedup
+        val wins = Dedup.passageWindows(fresh, "doc_id", "text", k)
+        // Batch-first occurrence per hash via a map-side-combined min/count
+        // aggregate + the skew-safe join back (Dedup.joinPerHash: boilerplate
+        // mega-keys broadcast and never shuffle; cold keys are bounded per
+        // key) — the batch Dedup.passageMarked posture: a row_number window
+        // partitioned by `h` would serialize a mega-key's whole occurrence
+        // list in one unsplittable task (AQE skew handling covers bare-
+        // shuffle joins only, never windows). The per-hash frame (one row
+        // per distinct batch hash) also carries the store membership flag, so
+        // the store join happens once at hash granularity, not per
+        // occurrence; it is checkpointed because the hot and cold branches
+        // both read it.
+        val firsts = wins.groupBy(col("h"))
+          .agg(min(struct(col("id"), col("pos"))).as("first"),
+            count(lit(1)).as("cnt"))
+        val perHash = (ingest.priorOnly("hashes") match {
+          case Some(p) => firsts.join(
+              p.select(col("h")).withColumn("in_prior", lit(true)), Seq("h"), "left")
+            .withColumn("in_prior", coalesce(col("in_prior"), lit(false)))
+          case None => firsts.withColumn("in_prior", lit(false))
+        }).transform(graft.CheckpointRegistry.local(_, false))
+        // flagged feeds both the marking and the store append — materialize
+        // once (the corpusBuildSink cache posture; checkpoint also cuts the
+        // store-join lineage out of both consumers), and release it once both
+        // consumers have written: checkpoint blocks otherwise live until a
+        // driver GC runs ContextCleaner, accumulating across micro-batches
+        val flagged = Dedup.joinPerHash(wins, perHash, "cnt")
+          .transform(graft.CheckpointRegistry.local(_, true))
+        try {
+          val marked = flagged.filter(
+              col("in_prior") || struct(col("id"), col("pos")) =!= col("first"))
+            .select(col("id"), col("pos"))
+          Dedup.passageCoverage(marked, Dedup.passageBase(fresh, "doc_id", "text"), k)
+            .write.mode("overwrite").parquet(ingest.batchPath("reports"))
+          // every first occurrence enters the store, singletons included — a
+          // future batch must see them to mark ITS copy
+          flagged.filter(
+              !col("in_prior") && struct(col("id"), col("pos")) === col("first"))
+            .select(col("h"), col("id"), col("pos"))
+            .write.mode("overwrite").parquet(ingest.batchPath("hashes"))
+        } finally {
+          graft.CheckpointRegistry.release(flagged)
+          graft.CheckpointRegistry.release(perHash)
+        }
+      }
     }
-    val fresh = maxOld.map(m => b.filter(col("doc_id") > m)).getOrElse(b)
-    val freshMax: Option[Long] = {
-      val r = fresh.agg(max(col("doc_id"))).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-    // nothing new: a fully-redelivered batch's artifacts are already on
-    // disk (they land before its docmax), so returning re-commits nothing
-    if (freshMax.isEmpty) return
-    val wins = Dedup.passageWindows(fresh, "doc_id", "text", k)
-    // Batch-first occurrence per hash via a map-side-combined min/count
-    // aggregate + the skew-safe join back (Dedup.joinPerHash: boilerplate
-    // mega-keys broadcast and never shuffle; cold keys are bounded per
-    // key) — the batch Dedup.passageMarked posture: a row_number window
-    // partitioned by `h` would serialize a mega-key's whole occurrence
-    // list in one unsplittable task (AQE skew handling covers bare-
-    // shuffle joins only, never windows). The per-hash frame (one row
-    // per distinct batch hash) also carries the store membership flag, so
-    // the store join happens once at hash granularity, not per
-    // occurrence; it is checkpointed because the hot and cold branches
-    // both read it.
-    val firsts = wins.groupBy(col("h"))
-      .agg(min(struct(col("id"), col("pos"))).as("first"),
-        count(lit(1)).as("cnt"))
-    val perHash = (priorOnly(hashesRoot) match {
-      case Some(p) => firsts.join(
-          p.select(col("h")).withColumn("in_prior", lit(true)), Seq("h"), "left")
-        .withColumn("in_prior", coalesce(col("in_prior"), lit(false)))
-      case None => firsts.withColumn("in_prior", lit(false))
-    }).transform(graft.CheckpointRegistry.local(_, false))
-    // flagged feeds both the marking and the store append — materialize
-    // once (the corpusBuildSink cache posture; checkpoint also cuts the
-    // store-join lineage out of both consumers), and release it once both
-    // consumers have written: checkpoint blocks otherwise live until a
-    // driver GC runs ContextCleaner, accumulating across micro-batches
-    val flagged = Dedup.joinPerHash(wins, perHash, "cnt")
-      .transform(graft.CheckpointRegistry.local(_, true))
-    try {
-      val marked = flagged.filter(
-          col("in_prior") || struct(col("id"), col("pos")) =!= col("first"))
-        .select(col("id"), col("pos"))
-      Dedup.passageCoverage(marked, Dedup.passageBase(fresh, "doc_id", "text"), k)
-        .write.mode("overwrite").parquet(s"$reportsRoot/batch=$batchId")
-      // every first occurrence enters the store, singletons included — a
-      // future batch must see them to mark ITS copy
-      flagged.filter(
-          !col("in_prior") && struct(col("id"), col("pos")) === col("first"))
-        .select(col("h"), col("id"), col("pos"))
-        .write.mode("overwrite").parquet(s"$hashesRoot/batch=$batchId")
-      Seq(freshMax.get).toDF("max_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$maxRoot/batch=$batchId")
-    } finally {
-      graft.CheckpointRegistry.release(flagged)
-      graft.CheckpointRegistry.release(perHash)
-    }
-  }
 
   /** Compact a [[passageDedupSink]] store: fold every per-batch delta
-    * (hashes, reports, docmax) into one `batch=-1` sentinel partition in
-    * a FRESH destination store. −1 sorts below every real micro-batch id,
-    * so the sink's `batch < batchId` state reads keep the compacted rows
-    * for every future batch — INCLUDING batch 0 of a stream restarted
-    * with a fresh checkpoint, a read the uncompacted layout would miss
-    * (its deltas sit at ids a restarted stream's `batch < 0` filter
-    * excludes). Like [[graft.operators.Similarity.compactIvfIndex]], the
-    * destination must be untouched and the caller pointer-swaps: an
-    * in-place rewrite would open a crash window in which a half-written
-    * base coexists with undeleted deltas and the store serves duplicate
-    * hash rows. Loud on a source that is not a passage store. */
+    * (hashes, reports, commit markers) into one `batch=-1` sentinel
+    * partition in a FRESH destination store. −1 sorts below every real
+    * micro-batch id, so the sink's `batch < batchId` state reads keep the
+    * compacted rows for every future batch — INCLUDING batch 0 of a
+    * stream restarted with a fresh checkpoint, a read the uncompacted
+    * layout would miss (its deltas sit at ids a restarted stream's
+    * `batch < 0` filter excludes). Like
+    * [[graft.operators.Similarity.compactIvfIndex]], the destination must
+    * be untouched and the caller pointer-swaps: an in-place rewrite would
+    * open a crash window in which a half-written base coexists with
+    * undeleted deltas and the store serves duplicate hash rows. Loud on a
+    * source that is not a passage store. */
   def compactPassageStore(spark: org.apache.spark.sql.SparkSession,
                           srcDir: String, dstDir: String): Unit = {
+    import MonotoneIngest.{MarkerCol, MarkerDir}
     val hconf = spark.sparkContext.hadoopConfiguration
-    require(EventStreams.hasParquetFile(s"$srcDir/hashes"),
+    def hasData(path: String) = graft.sources.Sources.hasParquetData(path, hconf)
+    require(hasData(s"$srcDir/hashes"),
       s"$srcDir is not a passage-dedup store (no hashes/ parquet)")
-    Seq("hashes", "reports", "docmax").foreach { sub =>
+    Seq("hashes", "reports", MarkerDir).foreach { sub =>
       val p = new org.apache.hadoop.fs.Path(s"$dstDir/$sub")
       require(!p.getFileSystem(hconf).exists(p),
         s"$dstDir already carries $sub/ — compactPassageStore writes a " +
           "FRESH store; compact into a new dir and pointer-swap")
     }
-    // fold COMMITTED batches only: docmax is each batch's commit marker
-    // (written last), so a store whose final batch crashed mid-write
-    // carries orphan hashes/reports above the committed horizon — folding
-    // those would erase their batch identity and the post-swap REPLAY of
-    // that batch would see its own hashes as prior state (marking its
-    // first occurrences as duplicates) and duplicate its report rows
-    require(EventStreams.hasParquetFile(s"$srcDir/docmax"),
-      s"$srcDir has no committed batch (docmax/ absent) — nothing to compact")
-    val commit = spark.read.parquet(s"$srcDir/docmax")
+    // fold COMMITTED batches only: a store whose final batch crashed
+    // mid-write carries orphan hashes/reports above the last commit
+    // marker — folding those would erase their batch identity and the
+    // post-swap REPLAY of that batch would see its own hashes as prior
+    // state (marking its first occurrences as duplicates) and duplicate
+    // its report rows
+    require(hasData(s"$srcDir/$MarkerDir"),
+      s"$srcDir has no committed batch ($MarkerDir/ absent) — nothing to compact")
+    val commit = spark.read.parquet(s"$srcDir/$MarkerDir")
       .agg(max(col("batch")).cast("long").as("b"),
-        max(col("max_id")).cast("long").as("m")).head()
+        max(col(MarkerCol)).cast("long").as("m")).head()
     val (bCommit, maxId) = (commit.getLong(0), commit.getLong(1))
     // `batch` arrives as the partition column of every component read and
     // must not ride into the sentinel partition as a data column
     spark.read.parquet(s"$srcDir/hashes").filter(col("batch") <= bCommit)
       .drop("batch")
       .write.mode("errorifexists").parquet(s"$dstDir/hashes/batch=-1")
-    if (EventStreams.hasParquetFile(s"$srcDir/reports"))
+    if (hasData(s"$srcDir/reports"))
       spark.read.parquet(s"$srcDir/reports").filter(col("batch") <= bCommit)
         .drop("batch")
         .write.mode("errorifexists").parquet(s"$dstDir/reports/batch=-1")
     import spark.implicits._
-    Seq(maxId).toDF("max_id").coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dstDir/docmax/batch=-1")
+    Seq(maxId).toDF(MarkerCol).coalesce(1)
+      .write.mode("errorifexists").parquet(s"$dstDir/$MarkerDir/batch=-1")
   }
 }

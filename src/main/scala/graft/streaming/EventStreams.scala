@@ -304,21 +304,6 @@ object EventStreams {
       grace = retired.map(p => java.nio.file.Paths.get(p).getFileName.toString).toSet)
   }
 
-  /** True iff `path` holds at least one real parquet data file,
-    * recursing past partition dirs and skipping `_temporary`/dot
-    * entries — the guard every per-batch state read needs: a crash
-    * mid-write leaves a partition dir with only write-orphans inside,
-    * and a bare exists()/isDirectory check would then send
-    * spark.read.parquet into an unrecoverable 'unable to infer schema'
-    * on every replay. */
-  private[streaming] def hasParquetFile(path: String): Boolean =
-    // one shared implementation of the orphan-skipping rules (a
-    // divergence between the streaming and artifact guards would be
-    // silent); the default Hadoop conf resolves plain paths to the
-    // local FS exactly as the old java.io form did
-    graft.sources.Sources.hasParquetData(path,
-      new org.apache.hadoop.conf.Configuration())
-
   private[streaming] def publishSnapshot(outDir: String, snapshotName: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val tmp = Paths.get(outDir, s"_current.tmp")

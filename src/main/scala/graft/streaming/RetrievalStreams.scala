@@ -15,7 +15,7 @@ object RetrievalStreams {
 
   /** foreachBatch sink: bootstrap the artifact on first contact
     * (idempotent meta write), then append the micro-batch under its own
-    * batch id. Replay safety comes from batch identity, not a docmax:
+    * batch id. Replay safety comes from batch identity, not a watermark:
     * every zone write deterministically overwrites its own `batch=` dir
     * and the commit marker lands last, so a redelivered batch rewrites
     * identical files and a crashed attempt stays invisible. Caller

@@ -543,6 +543,38 @@ class StreamingSpec extends SpecBase {
     } finally query.stop()
   }
 
+  test("a re-run batch id counts only earlier batches' commit markers: the passage sink rewrites it whole") {
+    import graft.streaming.DocumentStreams
+    import graft.operators.Dedup
+    val docs = Tables.documents(spark, SfDir)
+      .select($"doc_id", $"text").collect().sortBy(_.getLong(0))
+      .map(r => (r.getLong(0), r.getString(1)))
+    val chunks = docs.grouped((docs.length + 2) / 3).toSeq
+    val outDir = java.nio.file.Files.createTempDirectory("passages_rerun").toString
+    val sink = DocumentStreams.passageDedupSink(outDir) _
+    sink(chunks(0).toSeq.toDF("doc_id", "text"), 0L)
+    // batch id 1 commits over a prefix of its rows, then re-runs over all
+    // of them: the batch id, not the row, is the replay unit. Were the
+    // first attempt's own marker counted, the prefix would drop as
+    // redelivered and the rewrite of batch 1's reports and hashes would
+    // lose it.
+    sink(chunks(1).take(chunks(1).length / 2).toSeq.toDF("doc_id", "text"), 1L)
+    sink(chunks(1).toSeq.toDF("doc_id", "text"), 1L)
+    sink(chunks(2).toSeq.toDF("doc_id", "text"), 2L)
+    val streamed = spark.read.parquet(s"$outDir/reports")
+      .select($"id", $"n_tokens", $"dup_windows", $"dup_tokens",
+        $"kept_tokens", $"dup_frac_1e4")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+    val batchTwin = Dedup
+      .duplicatePassages(Tables.documents(spark, SfDir), "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+    assert(streamed == batchTwin,
+      s"stream-only ${(streamed -- batchTwin).take(3)}, " +
+        s"batch-only ${(batchTwin -- streamed).take(3)}")
+  }
+
   test("passage store compaction: a restarted stream continues on the swapped store; reuse fails loud") {
     import graft.streaming.DocumentStreams
     import graft.operators.Dedup
@@ -875,34 +907,66 @@ class StreamingSpec extends SpecBase {
     val docs = Tables.documents(spark, SfDir)
       .select($"doc_id", $"text").orderBy($"doc_id").collect()
     val (first, rest) = docs.splitAt(docs.length * 2 / 3)
+    def toDf(rows: Array[org.apache.spark.sql.Row]) =
+      rows.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text")
+    val all = Tables.documents(spark, SfDir).select($"doc_id", $"text")
     // the sink's CC calls and the full recompute run on the driver
     // union-find (default bound) and on the distributed contraction (0)
     for (bound <- Seq(None, Some("0"))) withCcDriverBound(bound) {
       val outDir = java.nio.file.Files.createTempDirectory("clusters_crash").toString
       val sink = DocumentStreams.clusterMaintenanceSink(outDir) _
-      sink(first.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text"), 0L)
-      // CRASH SIMULATION: batch 1's docs + docmax land, but the process
-      // dies before the labels snapshot publishes
-      rest.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$outDir/docs/batch=1")
-      Seq(rest.map(_.getLong(0)).max).toDF("max_id")
-        .write.mode("overwrite").parquet(s"$outDir/docmax/batch=1")
-      // the REPLAYED batch filters to zero fresh rows — the coverage meta
-      // must still notice the unlabeled ids and re-cluster them (an
-      // early return here loses batch 1's links forever)
-      sink(rest.toSeq.map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text"), 1L)
-      val live = spark.read
+      def liveLabels() = spark.read
         .parquet(s"${graft.streaming.EventStreams.currentSnapshotDir(outDir).get}/labels")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val all = Tables.documents(spark, SfDir).select($"doc_id", $"text")
       val full = Dedup.connectedComponents(
         all.select($"doc_id".as("id")),
         Dedup.minhashDedupLinks(all, "doc_id", "text", threshold = 0.9)
           .select($"id_a", $"id_b"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      sink(toDf(first), 0L)
+      val snap0 = graft.streaming.EventStreams.currentSnapshotDir(outDir).get
+      // CRASH SIMULATION: batch 1's docs + commit marker land, but the
+      // process dies before the labels snapshot publishes
+      toDf(rest).write.mode("overwrite").parquet(s"$outDir/docs/batch=1")
+      Seq(rest.map(_.getLong(0)).max).toDF("max_id")
+        .write.mode("overwrite").parquet(s"$outDir/docmax/batch=1")
+      // the same-id REPLAY counts only earlier batches' markers, so it
+      // re-ingests batch 1 whole and publishes the full clustering
+      sink(toDf(rest), 1L)
+      val live = liveLabels()
       assert(live == full,
         s"bound $bound: live-only ${(live -- full).take(3)}, full-only ${(full -- live).take(3)}")
+      // the OTHER heal path — a LATER batch with zero fresh rows after a
+      // missed publish: the coverage meta alone must notice the unlabeled
+      // ids and re-cluster them (an early return here would lose batch
+      // 1's links forever)
+      java.nio.file.Files.write(java.nio.file.Paths.get(outDir, "_current"),
+        java.nio.file.Paths.get(snap0).getFileName.toString.getBytes("UTF-8"))
+      assert(liveLabels().map(_._1).max < rest.map(_.getLong(0)).min, "rollback precondition")
+      sink(toDf(rest), 2L) // every row <= batch 1's marker -> fresh empty
+      val healed = liveLabels()
+      assert(healed == full,
+        s"bound $bound: healed-only ${(healed -- full).take(3)}, full-only ${(full -- healed).take(3)}")
     }
+  }
+
+  test("the document sinks' commit marker is named in exactly one place under src/main") {
+    // the watermark, fresh-row filter, commit marker and coverage check
+    // live in graft.streaming.MonotoneIngest; a second mention of the
+    // marker root is a hand-copied protocol
+    import scala.jdk.CollectionConverters._
+    val sources = scala.util.Using.resource(
+        java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    assert(sources.nonEmpty, "the guard must see the sources")
+    val hits = for {
+      f <- sources
+      text = java.nio.file.Files.readString(f)
+      m <- "docmax".r.findAllMatchIn(text)
+    } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}"
+    assert(hits.size == 1, s"expected one mention, got:\n${hits.mkString("\n")}")
+    assert(hits.head.contains("MonotoneIngest.scala"), hits.head)
   }
 
   test("streaming incremental dedup (stream-static anti join) matches batch q81's keep set") {

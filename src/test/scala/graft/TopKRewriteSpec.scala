@@ -25,15 +25,20 @@ class TopKRewriteSpec extends SpecBase {
   private def hasWindowExec(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("Window")
 
-  private def ruleOff[A](body: => A): A = {
-    spark.conf.set(TopKPerKeyRewrite.EnabledKey, "false")
-    try body finally spark.conf.set(TopKPerKeyRewrite.EnabledKey, "true")
+  // Reference answers keep the rank column, so the rule leaves them on
+  // Spark's builtin window path ("does not fire when the rank column
+  // survives"); the rank is dropped after the collect.
+  private def reference(df: DataFrame): Set[Seq[Any]] = {
+    assert(topkExecs(df).isEmpty, "the reference must not be rewritten")
+    df.collect().map(_.toSeq.init).toSet
   }
 
-  private def windowIdiom(k: Int): DataFrame = {
+  private def ranked(k: Int): DataFrame = {
     val w = Window.partitionBy($"o_custkey").orderBy($"o_orderdate", $"o_orderkey")
-    orders.withColumn("rn", row_number().over(w)).filter($"rn" <= k).drop("rn")
+    orders.withColumn("rn", row_number().over(w)).filter($"rn" <= k)
   }
+
+  private def windowIdiom(k: Int): DataFrame = ranked(k).drop("rn")
 
   test("df idiom lowers to TopKPerKey with identical results") {
     for (k <- Seq(1, 3)) {
@@ -44,8 +49,8 @@ class TopKRewriteSpec extends SpecBase {
       assert(execs.exists(_.contains(s", $k, true")) &&
         execs.exists(_.contains(s", $k, false")), execs.mkString("\n"))
       assert(!hasWindowExec(rewritten), "Window must be gone after the rewrite")
-      val got = rewritten.select($"o_orderkey").as[Long].collect().toSet
-      val want = ruleOff(windowIdiom(k).select($"o_orderkey").as[Long].collect().toSet)
+      val got = rewritten.select($"o_orderkey").collect().map(_.toSeq).toSet
+      val want = reference(ranked(k).select($"o_orderkey", $"rn"))
       assert(got == want, s"k=$k: rewrite changed the answer " +
         s"(extra=${(got -- want).take(3)}, missing=${(want -- got).take(3)})")
     }
@@ -69,13 +74,11 @@ class TopKRewriteSpec extends SpecBase {
         |  FROM rw_orders) WHERE rn <= 2""".stripMargin)
     assert(topkExecs(df).size == 2,
       df.queryExecution.executedPlan.toString.take(500))
-    val want = ruleOff {
-      spark.sql(
-        """SELECT o_custkey, o_orderkey FROM (
-          |  SELECT *, row_number() OVER (
-          |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
-          |  FROM rw_orders) WHERE rn <= 2""".stripMargin).collect().map(_.toSeq).toSet
-    }
+    val want = reference(spark.sql(
+      """SELECT o_custkey, o_orderkey, rn FROM (
+        |  SELECT *, row_number() OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
+        |  FROM rw_orders) WHERE rn <= 2""".stripMargin))
     assert(df.collect().map(_.toSeq).toSet == want)
   }
 
@@ -86,12 +89,10 @@ class TopKRewriteSpec extends SpecBase {
       .select($"o_orderkey")
     assert(topkExecs(df).size == 2,
       df.queryExecution.executedPlan.toString.take(500))
-    val want = ruleOff {
-      orders.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3 && $"o_totalprice" > 1000.0).drop("rn")
-        .select($"o_orderkey").as[Long].collect().toSet
-    }
-    assert(df.as[Long].collect().toSet == want)
+    val want = reference(orders.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 3 && $"o_totalprice" > 1000.0)
+      .select($"o_orderkey", $"rn"))
+    assert(df.collect().map(_.toSeq).toSet == want)
   }
 
   test("does not fire when the rank column survives") {
@@ -107,9 +108,8 @@ class TopKRewriteSpec extends SpecBase {
     assert(topkExecs(df).isEmpty)
   }
 
-  test("does not fire past MaxK or when disabled") {
+  test("does not fire past MaxK") {
     assert(topkExecs(windowIdiom(TopKPerKeyRewrite.MaxK + 1)).isEmpty)
-    ruleOff { assert(topkExecs(windowIdiom(3)).isEmpty) }
   }
 
   test("rewrite prunes the scan to referenced columns") {

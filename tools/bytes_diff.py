@@ -7,7 +7,9 @@ moved with bytes flat is ambient load/JIT noise. This tool makes that
 adjudication mechanical:
 
   # same-scale round-over-round diff (default thresholds 15% and 64 KiB)
-  python3 tools/bytes_diff.py tools/baselines/bytes_sf01_r7.json target/bench.json
+  # (the anchor tools/round_gate.sh uses: graft.Bench at sf0.1 on 4 cores;
+  # bench with SPARK_GRAFT_CPUS="$(nproc)")
+  python3 tools/bytes_diff.py tools/baselines/bench_sf01_41bd45a_4c.json target/bench.json
 
   # cross-scale ratio audit (sf0.1 -> sf1 should be <= ~12x for linear
   # plans; all-pairs ORACLE GATES are expected super-linear and listed)
