@@ -60,9 +60,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark: SparkSession = GraftSession.builder(Some(s"local[$cpus]"), cpus).getOrCreate()
+    val spark: SparkSession = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)

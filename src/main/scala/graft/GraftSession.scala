@@ -31,8 +31,14 @@ object GraftSession {
     */
   val CodegenCacheEntries: Int = 1000
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+  /** The `local[N]` session of the tooling mains (Bench, Verify,
+    * DumpPlans, ScaleUp), with N shuffle partitions: N is
+    * `SPARK_GRAFT_CPUS`, by default every available core. */
+  def local(): SparkSession = {
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString).toInt
     builder(Some(s"local[$cores]"), cores).getOrCreate()
+  }
 
   def builder(master: Option[String], shufflePartitions: Int): SparkSession.Builder = {
     val b = SparkSession

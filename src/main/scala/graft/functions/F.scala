@@ -21,24 +21,6 @@ object F {
   def hashKey(cols: Column*): Column =
     substring(md5(concat_ws("", cols.map(_.cast("string")): _*)), 1, 8)
 
-  /** Similarity ratio in [0,100] from Levenshtein distance —
-    * `100 * (1 - lev/max(len))`, rounded to integer.
-    *
-    * Reference: operators/derive/to_dp.py:264 uses `thefuzz.fuzz.ratio`
-    * for duplicate-branch reconciliation; this is the standard
-    * distance-based equivalent that stays SQL-expressible and codegen'd.
-    */
-  def fuzzRatio(a: Column, b: Column): Column = {
-    // null first: greatest() skips nulls, so NULL-vs-empty would
-    // otherwise take the maxLen==0 branch and score a missing value as
-    // a PERFECT match — the null result matches levenshtein's own
-    // propagation
-    val maxLen = greatest(length(a), length(b))
-    when(a.isNull || b.isNull, lit(null).cast("long"))
-      .when(maxLen === 0, lit(100L))
-      .otherwise(round(lit(100.0) * (lit(1.0) - levenshtein(a, b).cast("double") / maxLen.cast("double"))).cast("long"))
-  }
-
   /** Collapse runs of whitespace and trim. Reference: helpers.py:377. */
   def normalizeWhitespace(c: Column): Column =
     trim(regexp_replace(c, "\\s+", " "))

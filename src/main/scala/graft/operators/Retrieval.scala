@@ -24,8 +24,11 @@ import graft.functions.F
   *   df/batch=<id>/bucket=<b>       (tok, df)              — per-batch delta
   *   doclen/batch=<id>              (doc_id, dl)
   *   stats/batch=<id>               (n_docs, sum_dl)       — per-batch delta
-  *   commits/batch=<id>             (batch_id)             — written LAST
+  *   <commit marker>/batch=<id>     (max_id, null)         — written LAST
   * }}}
+  * The commit marker is the one every per-batch artifact shares
+  * ([[graft.sources.Sources.commitBatch]]); BM25 replays on batch
+  * identity, not a doc-id watermark, so its `max_id` is null.
   * `bucket = pmod(xxhash64(tok), n_buckets)` is the probe-pruning axis:
   * a query touches only its terms' buckets, so every other bucket's
   * files are dropped by STATIC partition pruning at the scan — the
@@ -37,12 +40,14 @@ import graft.functions.F
   * Crash posture (lesson 48): every zone write is a deterministic
   * overwrite of its own `batch=` dir and the commit marker lands LAST,
   * so a replayed batch id rewrites identical files and a crashed attempt
-  * is invisible — reads and compaction fold COMMITTED batches only.
+  * is invisible — reads and compaction fold COMMITTED batches only
+  * ([[graft.sources.Sources.committedBatches]]).
   */
 object Retrieval {
+  import graft.sources.Sources
 
   private def hasParquetData(spark: SparkSession, path: String): Boolean =
-    graft.sources.Sources.hasParquetData(path, spark.sparkContext.hadoopConfiguration)
+    Sources.hasParquetData(path, spark.sparkContext.hadoopConfiguration)
 
   private def requireArtifact(spark: SparkSession, dir: String): Int = {
     require(hasParquetData(spark, s"$dir/meta"),
@@ -50,31 +55,14 @@ object Retrieval {
     spark.read.parquet(s"$dir/meta").head().getAs[Int]("n_buckets")
   }
 
-  /** Committed batch ids — the only state reads may fold. */
-  private def committedBatches(spark: SparkSession, dir: String): Seq[Long] =
-    if (!hasParquetData(spark, s"$dir/commits")) Seq.empty
-    else spark.read.parquet(s"$dir/commits")
-      // `batch` is a discovered partition column — inferred INT for small
-      // ids; normalize to long so callers' isin() literals always match
-      .select(col("batch").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-
   /** Build a fresh BM25 index artifact from a corpus. The destination
-    * must be untouched (the [[Similarity.compactIvfIndex]] freshness
-    * posture — stale zones would fold into every future read). */
+    * must be untouched ([[graft.sources.Sources.requireFreshDestination]]
+    * — stale zones would fold into every future read). */
   def saveBm25Index(docs: DataFrame, idCol: String, textCol: String,
                     dir: String, nBuckets: Int = 64): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    Seq("meta", "postings", "df", "doclen", "stats", "commits").foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      require(!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-        s"$dir already carries $sub/ — saveBm25Index writes a FRESH artifact; " +
-          "append with appendToBm25Index or build into a new dir and pointer-swap")
-    }
-    Seq(nBuckets).toDF("n_buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    Sources.requireFreshDestination(dir, spark.sparkContext.hadoopConfiguration)
+    ensureBm25Index(spark, dir, nBuckets)
     appendToBm25Index(spark, dir, docs, idCol, textCol, batchId = 0L)
   }
 
@@ -106,7 +94,6 @@ object Retrieval {
     * `batch=` dir and the commit marker is written LAST. */
   def appendToBm25Index(spark: SparkSession, dir: String, docs: DataFrame,
                         idCol: String, textCol: String, batchId: Long): Unit = {
-    import spark.implicits._
     val nBuckets = requireArtifact(spark, dir)
     require(batchId >= 0, s"batchId must be >= 0 ($batchId); -1 is the compaction sentinel")
     // one tokenize pass feeds tf, dl and the totals — cache, then drop
@@ -139,8 +126,7 @@ object Retrieval {
     } finally t.unpersist()
     // the commit marker lands LAST: a crash anywhere above leaves the
     // batch invisible to every read; a replay overwrites identical files
-    Seq(batchId).toDF("batch_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/commits/batch=$batchId")
+    Sources.commitBatch(spark, dir, batchId, maxId = None)
   }
 
   /** BM25 top-k per query against a SAVED index — the retrieval twin of
@@ -161,7 +147,7 @@ object Retrieval {
   def bm25TopKFromSaved(spark: SparkSession, dir: String, queries: DataFrame,
                         topK: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val nBuckets = requireArtifact(spark, dir)
-    val committed = committedBatches(spark, dir)
+    val committed = Sources.committedBatches(spark, dir).map(_.batch)
     require(committed.nonEmpty, s"$dir has no committed batches — nothing to probe")
     val qTerms = queries.select(col("query_id"), col("tok"))
     // the SAME expression the write path bucketed with — a drifted
@@ -192,47 +178,28 @@ object Retrieval {
   }
 
   /** COMPACT a saved index into `dstDir`: fold every COMMITTED batch's
-    * zones into one `batch=-1` sentinel (df summed per token, totals
-    * summed, postings/doclen co-located one file per bucket) in a FRESH
-    * destination the caller pointer-swaps — the
+    * zones into one `batch=-1` sentinel ([[graft.sources.Sources
+    * .foldCommitted]]; df summed per token, totals summed, postings/doclen
+    * co-located one file per bucket) in a FRESH destination the caller
+    * pointer-swaps — the
     * [[graft.streaming.DocumentStreams.compactPassageStore]] posture.
     * Uncommitted (crash-orphaned) batches are left behind by
     * construction: folding them would let a future replay of that batch
     * double-count itself (lesson 48). */
   def compactBm25Index(spark: SparkSession, srcDir: String, dstDir: String): Unit = {
-    import spark.implicits._
     val nBuckets = requireArtifact(spark, srcDir)
-    val committed = committedBatches(spark, srcDir)
-    require(committed.nonEmpty, s"$srcDir has no committed batches — nothing to compact")
-    Seq("meta", "postings", "df", "doclen", "stats", "commits").foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$dstDir/$sub")
-      require(!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-        s"$dstDir already carries $sub/ — compactBm25Index writes a FRESH " +
-          "artifact; compact into a new dir and pointer-swap")
-    }
-    Seq(nBuckets).toDF("n_buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dstDir/meta")
-    spark.read.parquet(s"$srcDir/postings")
-      .filter(col("batch").isin(committed: _*)).drop("batch")
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dstDir/postings/batch=-1")
-    spark.read.parquet(s"$srcDir/df")
-      .filter(col("batch").isin(committed: _*))
-      .groupBy(col("tok"), col("bucket"))
-      .agg(sum(col("df")).cast("long").as("df"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dstDir/df/batch=-1")
-    spark.read.parquet(s"$srcDir/doclen")
-      .filter(col("batch").isin(committed: _*)).drop("batch")
-      .write.mode("overwrite").parquet(s"$dstDir/doclen/batch=-1")
-    spark.read.parquet(s"$srcDir/stats")
-      .filter(col("batch").isin(committed: _*))
-      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("sum_dl")).cast("long").as("sum_dl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dstDir/stats/batch=-1")
-    Seq(-1L).toDF("batch_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dstDir/commits/batch=-1")
+    Sources.requireFreshDestination(dstDir, spark.sparkContext.hadoopConfiguration)
+    Sources.foldCommitted(spark, srcDir, dstDir)(
+      ("postings", (rows, path) => rows.repartition(col("bucket"))
+        .write.partitionBy("bucket").parquet(path)),
+      ("df", (rows, path) => rows.groupBy(col("tok"), col("bucket"))
+        .agg(sum(col("df")).cast("long").as("df"))
+        .repartition(col("bucket")).write.partitionBy("bucket").parquet(path)),
+      ("doclen", (rows, path) => rows.write.parquet(path)),
+      ("stats", (rows, path) => rows
+        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+          sum(col("sum_dl")).cast("long").as("sum_dl"))
+        .coalesce(1).write.parquet(path)))
+    ensureBm25Index(spark, dstDir, nBuckets)
   }
 }

@@ -177,27 +177,33 @@ object Similarity {
   }
 
   /** Exact-cosine scoring over the probed cells' inverted-file rows —
-    * the closing half of [[ivfTopK]] and [[ivfTopKFromSaved]]. Takes the
+    * the closing half of [[ivfTopK]] and [[ivfTopKFromSaved]], over the
     * inverted file as SEGMENTS (base [+ streaming delta]) and the
-    * optional tombstone set: each segment joins the broadcast probes
-    * itself (per-scan pruning survives the union) and deleted ids are
-    * anti-joined out BEFORE the top-k, so a tombstoned vector can never
-    * occupy a rank. */
+    * optional tombstone set ([[probeSegments]]). */
   private def probeIvf(centroids: Seq[(Int, Array[Double])], segments: Seq[DataFrame],
                        queries: DataFrame, k: Int, nProbe: Int,
                        tombstones: Option[DataFrame] = None): DataFrame = {
-    val probes = probeCells(centroids, queries, nProbe)
-    val scored = segments.map { seg =>
-      val j = seg.join(broadcast(probes), "cell")
-        .filter(col("vec_id") =!= col("query_id"))
-      tombstones.fold(j)(t => j.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    }.reduce(_.unionByName(_))
+    val scored = probeSegments(segments, probeCells(centroids, queries, nProbe), tombstones)
       .withColumn("cos", round(F.cosine(col("q_emb"), col("embedding")), 4))
     TopK.topKWithRank(scored, col("query_id"),
       Seq(col("cos").desc, col("vec_id")), k, "rk")
       .select(col("query_id"), col("rk").cast("long").as("rk"),
         col("vec_id").as("neighbor_id"), col("cos"))
   }
+
+  /** The probed rows of an inverted file held as `segments`: each
+    * segment joins the broadcast (query_id, cell, …) `probes` itself, so
+    * every segment scan keeps its own partition-pruning filter through
+    * the union; a query never matches itself; and tombstoned ids are
+    * anti-joined out here, before any ranking, so a deleted vector can
+    * never occupy a rank or a shortlist slot. */
+  private def probeSegments(segments: Seq[DataFrame], probes: DataFrame,
+                            tombstones: Option[DataFrame]): DataFrame =
+    segments.map { seg =>
+      val j = seg.join(broadcast(probes), "cell")
+        .filter(col("vec_id") =!= col("query_id"))
+      tombstones.fold(j)(t => j.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    }.reduce(_.unionByName(_))
 
   /** Persist the fitted IVF index as a reusable on-disk ARTIFACT:
     * centroids as a tiny parquet (cell, centroid) and the inverted file
@@ -256,7 +262,7 @@ object Similarity {
   /** FS-agnostic codebook presence — the marker distinguishing a
     * composed IVFADC artifact from a plain IVF one. Goes through the
     * Hadoop FileSystem of the path, so HDFS/object-store artifact dirs
-    * answer correctly (a java.io.File check would always say absent
+    * answer correctly (a local-disk check would always say absent
     * there). */
   private def hasCodebook(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Boolean =
@@ -313,8 +319,9 @@ object Similarity {
     // fail loud on a non-artifact dir: a typo'd (or already-swapped)
     // path would otherwise grow a tombstone file nothing reads while
     // the real index keeps serving the "deleted" vectors
-    val cPath = new org.apache.hadoop.fs.Path(s"$dir/centroids")
-    require(cPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cPath),
+    // and a save that crashed mid-centroids (a `_temporary`-only dir) is
+    // no artifact either: tombstones beside it would outlive its rebuild
+    require(hasParquetData(spark, s"$dir/centroids"),
       s"$dir is not a saved ANN artifact (no centroids) — nothing to delete from")
     ids.select(col("vec_id")).distinct()
       .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
@@ -410,25 +417,16 @@ object Similarity {
     * rewriting in place: the artifact dir is the reader's unit of
     * atomicity, so the switch is the caller's pointer swap — exactly
     * the snapshot-publish posture of the streaming sinks. The
-    * destination must be FRESH: compaction writes no delta/ and no
-    * tombstones/, so a reused artifact dir (the pointer-swap ping-pong
-    * an A/B layout invites) would keep its leftover LSM state and the
-    * compacted view would resurrect already-folded delta rows and mask
-    * live ids with stale tombstones — fail loud instead. */
+    * destination must be FRESH
+    * ([[graft.sources.Sources.requireFreshDestination]]): compaction
+    * writes no delta/ and no tombstones/, so a reused artifact dir (the
+    * pointer-swap ping-pong an A/B layout invites) would keep its
+    * leftover LSM state — the compacted view would resurrect
+    * already-folded delta rows, mask live ids with stale tombstones, or
+    * read a stale codebook/ as the family marker — fail loud instead. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       srcDir: String, dstDir: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // codebook is in the list for the family marker, not just hygiene: a
-    // stale codebook/ beside a compacted plain-IVF artifact would make
-    // hasCodebook misclassify it as composed and probes read a codebook
-    // that never quantized these cells
-    Seq("cells", "delta", "tombstones", "centroids", "codebook").foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$dstDir/$sub")
-      require(!p.getFileSystem(hconf).exists(p),
-        s"$dstDir already carries $sub/ — compactIvfIndex writes a FRESH " +
-          "artifact (it never clears stale state); compact into a new dir " +
-          "and pointer-swap")
-    }
+    graft.sources.Sources.requireFreshDestination(dstDir, spark.sparkContext.hadoopConfiguration)
     spark.read.parquet(s"$srcDir/centroids")
       .coalesce(1).write.mode("overwrite").parquet(s"$dstDir/centroids")
     if (hasCodebook(spark, srcDir))
@@ -618,8 +616,7 @@ object Similarity {
     // broadcast — attaching tbl to the probe pairs first would copy it
     // nProbe times, and the probes-to-qTbl join (two tiny query-derived
     // frames) would plan an unhinted shuffle join on its own.
-    val scored = cellCodes.join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
+    val scored = probeSegments(Seq(cellCodes), probes, tombstones = None)
       .join(broadcast(qTbl), "query_id")
       .withColumn("adist", round(PqAdcScore(col("code"), col("tbl"), ks), 4))
     val shortlist = TopK.topKPerKey(scored, Seq(col("query_id")),
@@ -723,19 +720,13 @@ object Similarity {
     val codebook = loadCodebook(spark, dir)
     val ks = codebook(0).length
     val segs = segmentsOf(spark, dir)
-    val tombstones = tombstonesOf(spark, dir)
     val probes = probeCells(centroids, queries, nProbe)
       .select(col("query_id"), col("cell"))
     val qTbl = queries.select(col("vec_id").as("query_id"),
       PqDistTable(unitEmbedding, codebook).as("tbl"))
-    // Per-segment probe join before the union (per-scan pruning, as in
-    // probeIvf); tombstoned ids leave the race before the shortlist, so
-    // the re-rank never needs the mask.
-    val scored = segs.map { seg =>
-      val j = seg.join(broadcast(probes), "cell")
-        .filter(col("vec_id") =!= col("query_id"))
-      tombstones.fold(j)(t => j.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    }.reduce(_.unionByName(_))
+    // tombstoned ids leave the race before the shortlist, so the re-rank
+    // never needs the mask
+    val scored = probeSegments(segs, probes, tombstonesOf(spark, dir))
       .join(broadcast(qTbl), "query_id")
       .withColumn("adist", round(PqAdcScore(col("code"), col("tbl"), ks), 4))
     // The shortlist CARRIES cell so the re-rank joins on (cell, vec_id):

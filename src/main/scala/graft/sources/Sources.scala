@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, lit}
+import org.apache.spark.sql.functions.col
 
 /** Source/sink surface (SURVEY.md §2.D).
   *
@@ -10,6 +14,16 @@ import org.apache.spark.sql.functions.{col, concat, lit}
   * in, datasets + derived documents out. These helpers standardize the
   * options so every pipeline reads/writes the same way, and keep writes
   * partition-parallel (no single-file coalesce unless asked).
+  *
+  * It is also the one durable-state layer: every answer to "is this
+  * written, committed, fresh, live?" goes through the Hadoop FileSystem
+  * of the path here — state presence ([[hasParquetData]]), per-batch
+  * commit markers ([[commitBatch]], [[committedBatches]]), the fold of
+  * committed batches into a compaction sentinel ([[foldCommitted]]),
+  * fresh destinations ([[requireFreshDestination]]), dir swaps
+  * ([[stageAndSwapDir]]) and the `_current` snapshot pointer
+  * ([[publishSnapshot]], [[currentSnapshotDir]]). A scheme-qualified
+  * path (`file://`, `hdfs://`) therefore means the same as a plain one.
   */
 object Sources {
 
@@ -18,29 +32,31 @@ object Sources {
 
   /** True iff `path` holds at least one REAL parquet data file,
     * recursing past partition dirs and skipping `_temporary`/dot
-    * entries — the ONE shared guard behind every optional-state read:
+    * entries (Spark's own listing rule: an `_`-prefixed name is skipped
+    * unless it is a `col=value` partition dir such as `__bucket=3`)
+    * — the ONE shared guard behind every optional-state read:
     * a crash mid-write leaves a dir with only write-orphans inside,
     * and a bare exists() check would then send spark.read.parquet
     * into an unrecoverable 'unable to infer schema'. Goes through the
     * Hadoop FileSystem of the path (HDFS/object-store dirs answer
     * correctly) and recurses on the listing's own FileStatus entries —
     * no per-child re-stat round trips. */
-  def hasParquetData(path: String,
-                     conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
+  def hasParquetData(path: String, conf: Configuration): Boolean = {
+    val root = new Path(path)
     val fs = root.getFileSystem(conf)
     // A child deleted between listStatus and the recursive descent (a
     // concurrent replay swapping its batch dir) means "absent", not an
     // exception — the guard answers a presence question, and a vanished
     // subtree is by definition not presence. Caught per child so a
     // vanished sibling can't hide data elsewhere in the tree.
-    def scan(st: org.apache.hadoop.fs.FileStatus): Boolean =
+    def scan(st: FileStatus): Boolean =
       if (st.isFile) st.getPath.getName.endsWith(".parquet")
       else (try fs.listStatus(st.getPath)
-            catch { case _: java.io.FileNotFoundException =>
-              Array.empty[org.apache.hadoop.fs.FileStatus] })
-        .filterNot(c => c.getPath.getName.startsWith("_") ||
-          c.getPath.getName.startsWith("."))
+            catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] })
+        .filterNot { c =>
+          val name = c.getPath.getName
+          (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+        }
         .exists(scan)
     try fs.exists(root) && scan(fs.getFileStatus(root))
     catch { case _: java.io.FileNotFoundException => false }
@@ -72,21 +88,19 @@ object Sources {
     * ignore it if a crash strands it inside a promoted target. */
   private val StagedCompleteMarker = "_GRAFT_STAGED_COMPLETE"
 
-  def stageAndSwapDir(path: String, conf: org.apache.hadoop.conf.Configuration)
-                     (write: String => Unit): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".staging_${target.getName}")
+  def stageAndSwapDir(path: String, conf: Configuration)(write: String => Unit): Unit = {
+    val target = new Path(path)
+    val staging = new Path(target.getParent, s".staging_${target.getName}")
     val fs = target.getFileSystem(conf)
     // wipe any crashed prior attempt: its stale marker must not vouch
     // for this attempt's partial write
     if (fs.exists(staging)) fs.delete(staging, true)
     write(staging.toString)
-    fs.create(new org.apache.hadoop.fs.Path(staging, StagedCompleteMarker), true).close()
+    fs.create(new Path(staging, StagedCompleteMarker), true).close()
     if (fs.exists(target)) fs.delete(target, true)
     require(fs.rename(staging, target),
       s"failed to promote staged dir $staging -> $target")
-    fs.delete(new org.apache.hadoop.fs.Path(target, StagedCompleteMarker), false)
+    fs.delete(new Path(target, StagedCompleteMarker), false)
   }
 
   /** Recovery for [[stageAndSwapDir]]'s one crash window: if the target
@@ -98,20 +112,155 @@ object Sources {
     * and a staging dir beside a live target stays invisible until the
     * next swap reclaims it. Call from a reader/owner recovery path
     * before trusting target absence. */
-  def recoverStagedDir(path: String,
-                       conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".staging_${target.getName}")
+  def recoverStagedDir(path: String, conf: Configuration): Boolean = {
+    val target = new Path(path)
+    val staging = new Path(target.getParent, s".staging_${target.getName}")
     val fs = target.getFileSystem(conf)
-    val complete = fs.exists(new org.apache.hadoop.fs.Path(staging, StagedCompleteMarker))
+    val complete = fs.exists(new Path(staging, StagedCompleteMarker))
     if (!fs.exists(target) && complete) {
       require(fs.rename(staging, target),
         s"failed to promote orphaned staged dir $staging -> $target")
-      fs.delete(new org.apache.hadoop.fs.Path(target, StagedCompleteMarker), false)
+      fs.delete(new Path(target, StagedCompleteMarker), false)
       true
     } else false
   }
+
+  /** Fail loud unless `dir` is a FRESH destination: absent, or an empty
+    * dir. Every writer of a whole new artifact (a save, a compaction into
+    * a dir the caller pointer-swaps to) starts here: leftover state in a
+    * reused dir — stale zones, delta rows, tombstones, a codebook that
+    * would re-classify the artifact family — would fold into every later
+    * read of the new artifact. */
+  def requireFreshDestination(dir: String, conf: Configuration): Unit = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    val held = if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).sorted else Array.empty[String]
+    require(held.isEmpty, s"$dir already holds ${held.mkString(", ")} — the destination " +
+      "must be a FRESH store: write into a new dir and pointer-swap")
+  }
+
+  /** Delete `dir` and everything under it, so it is a fresh destination
+    * again (a scratch slot rebuilt once per process). */
+  def clearDestination(dir: String, conf: Configuration): Unit = {
+    val p = new Path(dir)
+    p.getFileSystem(conf).delete(p, true)
+  }
+
+  /** Per-batch commit marker root under an artifact dir:
+    * `<dir>/docmax/batch=<id>` holds one row, `max_id`, the largest doc id
+    * the batch committed (null for a writer that replays on batch
+    * identity alone, as the saved BM25 index does). A writer commits a
+    * batch LAST, after every per-batch zone of it: a crash anywhere before
+    * leaves the batch uncommitted, invisible to every read that folds
+    * [[committedBatches]] only, and its replay rewrites the same dirs. */
+  private val MarkerDir = "docmax"
+
+  /** One committed batch: its id and the largest doc id it committed. */
+  final case class Commit(batch: Long, maxId: Option[Long])
+
+  def commitBatch(spark: SparkSession, dir: String, batchId: Long, maxId: Option[Long]): Unit = {
+    import spark.implicits._
+    Seq(maxId).toDF("max_id").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/$MarkerDir/batch=$batchId")
+  }
+
+  /** Every batch committed under `dir` (one small collect; empty before
+    * the first commit). */
+  def committedBatches(spark: SparkSession, dir: String): Seq[Commit] = {
+    val root = s"$dir/$MarkerDir"
+    if (!hasParquetData(root, spark.sparkContext.hadoopConfiguration)) Nil
+    // `batch` is a discovered partition column, inferred INT for small ids
+    else spark.read.parquet(root).select(col("batch").cast("long"), col("max_id").cast("long"))
+      .collect().map(r => Commit(r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .toSeq
+  }
+
+  /** Fold the committed batches of `srcDir`'s per-batch `zones` into one
+    * `batch=-1` sentinel partition under `dstDir`, then commit the
+    * sentinel with the largest `max_id` folded. −1 sorts below every real
+    * batch id, so the folded rows stay visible to every later
+    * `batch < id` read — including batch 0 of a stream restarted with a
+    * fresh checkpoint. Only committed batches fold: a crashed batch's
+    * orphans would lose their batch identity in the sentinel, and its
+    * replay after the swap would read them as prior state and
+    * double-count itself. Each zone's `write(rows, path)` writes its
+    * committed rows (the `batch` column dropped) to the sentinel dir; a
+    * zone with no data is skipped. The caller checks `dstDir` with
+    * [[requireFreshDestination]] first and pointer-swaps after. */
+  def foldCommitted(spark: SparkSession, srcDir: String, dstDir: String)
+                   (zones: (String, (DataFrame, String) => Unit)*): Unit = {
+    val committed = committedBatches(spark, srcDir)
+    require(committed.nonEmpty, s"$srcDir has no committed batch — nothing to compact")
+    val ids = committed.map(_.batch)
+    zones.foreach { case (zone, write) =>
+      if (hasParquetData(s"$srcDir/$zone", spark.sparkContext.hadoopConfiguration))
+        write(spark.read.parquet(s"$srcDir/$zone").filter(col("batch").isin(ids: _*))
+          .drop("batch"), s"$dstDir/$zone/batch=-1")
+    }
+    commitBatch(spark, dstDir, -1L, committed.flatMap(_.maxId).maxOption)
+  }
+
+  private val Pointer = "_current"
+
+  /** The live snapshot dir the `_current` pointer under `dir` names. */
+  def currentSnapshotDir(dir: String, conf: Configuration): Option[String] =
+    currentSnapshotName(new Path(dir), conf).map(new Path(dir, _).toString)
+
+  private def currentSnapshotName(root: Path, conf: Configuration): Option[String] = {
+    val fs = pointerFs(root, conf)
+    val ptr = new Path(root, Pointer)
+    if (!fs.exists(ptr)) None
+    else {
+      val in = fs.open(ptr)
+      try Some(new String(in.readAllBytes(), UTF_8).trim) finally in.close()
+    }
+  }
+
+  /** The pointer-file snapshot protocol of the upsert, SCD2 and document
+    * sinks. `write` fills a new `snapshot_<tag>_<nanos>` dir under `dir`
+    * — unique per ATTEMPT, not per tag: a batch replayed after the swap
+    * but before its streaming checkpoint commits must not read and
+    * overwrite the live snapshot in one plan — then the `_current`
+    * pointer swaps to it, and every older snapshot dir but the one just
+    * retired is deleted. The retired one stays one more generation, so a
+    * reader that resolved the pointer just before the swap finishes its
+    * scan; crashed attempts' staged dirs go now. A crash before the swap
+    * leaves the previous snapshot live.
+    *
+    * The swap writes `_current.tmp` and renames it over `_current`. On a
+    * local disk that rename is one rename(2): an atomic replace. HDFS
+    * refuses to rename onto an existing file, so there the swap is
+    * FileContext's overwrite rename, also one atomic NameNode operation.
+    * On an object store a rename is a copy plus a delete and is not
+    * atomic: a deployment there puts a conditional put or a committer in
+    * front of the pointer. */
+  def publishSnapshot(dir: String, tag: Long, conf: Configuration)
+                     (write: String => Unit): Unit = {
+    val root = new Path(dir)
+    val staged = new Path(root, s"snapshot_${tag}_${System.nanoTime()}")
+    write(staged.toString)
+    val keep = currentSnapshotName(root, conf).toSet + staged.getName
+    val fs = pointerFs(root, conf)
+    val tmp = new Path(root, s"$Pointer.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(staged.getName.getBytes(UTF_8)) finally out.close()
+    if (!fs.rename(tmp, new Path(root, Pointer)))
+      FileContext.getFileContext(conf).rename(fs.makeQualified(tmp),
+        fs.makeQualified(new Path(root, Pointer)), Options.Rename.OVERWRITE)
+    fs.listStatus(root)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("snapshot_") &&
+        !keep(s.getPath.getName))
+      .foreach(s => fs.delete(s.getPath, true))
+  }
+
+  // The pointer goes through the raw FS under a checksummed local one:
+  // there the pointer and its .crc sidecar would swap in two renames, and
+  // a crash between them would leave a pointer that fails its checksum.
+  private def pointerFs(root: Path, conf: Configuration): FileSystem =
+    root.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
 
   /** CSV with header + explicit schema inference off the first file only.
     * (At 100 TB you pass an explicit schema; inference is a dev nicety.) */

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.F
 import graft.operators.{Sampling, TextAnalysis}
+import graft.sources.Sources
 
 /** Streaming twin of the corpus-curation pipeline (q72): documents arrive
   * continuously (crawl output), and the gate → dedup → sample stages run
@@ -379,14 +380,12 @@ object DocumentStreams {
       }
     }
 
-  /** Compact a [[passageDedupSink]] store: fold every per-batch delta
-    * (hashes, reports, commit markers) into one `batch=-1` sentinel
-    * partition in a FRESH destination store. −1 sorts below every real
-    * micro-batch id, so the sink's `batch < batchId` state reads keep the
-    * compacted rows for every future batch — INCLUDING batch 0 of a
-    * stream restarted with a fresh checkpoint, a read the uncompacted
-    * layout would miss (its deltas sit at ids a restarted stream's
-    * `batch < 0` filter excludes). Like
+  /** Compact a [[passageDedupSink]] store: fold every committed batch's
+    * hashes and reports into one `batch=-1` sentinel partition of a FRESH
+    * destination store ([[graft.sources.Sources.foldCommitted]]). The
+    * sentinel survives the sink's `batch < batchId` reads, including
+    * batch 0 of a stream restarted with a fresh checkpoint, which the
+    * uncompacted deltas would miss. Like
     * [[graft.operators.Similarity.compactIvfIndex]], the destination must
     * be untouched and the caller pointer-swaps: an in-place rewrite would
     * open a crash window in which a half-written base coexists with
@@ -394,40 +393,11 @@ object DocumentStreams {
     * source that is not a passage store. */
   def compactPassageStore(spark: org.apache.spark.sql.SparkSession,
                           srcDir: String, dstDir: String): Unit = {
-    import MonotoneIngest.{MarkerCol, MarkerDir}
     val hconf = spark.sparkContext.hadoopConfiguration
-    def hasData(path: String) = graft.sources.Sources.hasParquetData(path, hconf)
-    require(hasData(s"$srcDir/hashes"),
+    require(Sources.hasParquetData(s"$srcDir/hashes", hconf),
       s"$srcDir is not a passage-dedup store (no hashes/ parquet)")
-    Seq("hashes", "reports", MarkerDir).foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$dstDir/$sub")
-      require(!p.getFileSystem(hconf).exists(p),
-        s"$dstDir already carries $sub/ — compactPassageStore writes a " +
-          "FRESH store; compact into a new dir and pointer-swap")
-    }
-    // fold COMMITTED batches only: a store whose final batch crashed
-    // mid-write carries orphan hashes/reports above the last commit
-    // marker — folding those would erase their batch identity and the
-    // post-swap REPLAY of that batch would see its own hashes as prior
-    // state (marking its first occurrences as duplicates) and duplicate
-    // its report rows
-    require(hasData(s"$srcDir/$MarkerDir"),
-      s"$srcDir has no committed batch ($MarkerDir/ absent) — nothing to compact")
-    val commit = spark.read.parquet(s"$srcDir/$MarkerDir")
-      .agg(max(col("batch")).cast("long").as("b"),
-        max(col(MarkerCol)).cast("long").as("m")).head()
-    val (bCommit, maxId) = (commit.getLong(0), commit.getLong(1))
-    // `batch` arrives as the partition column of every component read and
-    // must not ride into the sentinel partition as a data column
-    spark.read.parquet(s"$srcDir/hashes").filter(col("batch") <= bCommit)
-      .drop("batch")
-      .write.mode("errorifexists").parquet(s"$dstDir/hashes/batch=-1")
-    if (hasData(s"$srcDir/reports"))
-      spark.read.parquet(s"$srcDir/reports").filter(col("batch") <= bCommit)
-        .drop("batch")
-        .write.mode("errorifexists").parquet(s"$dstDir/reports/batch=-1")
-    import spark.implicits._
-    Seq(maxId).toDF(MarkerCol).coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dstDir/$MarkerDir/batch=-1")
+    Sources.requireFreshDestination(dstDir, hconf)
+    val write: (DataFrame, String) => Unit = (rows, path) => rows.write.parquet(path)
+    Sources.foldCommitted(spark, srcDir, dstDir)("hashes" -> write, "reports" -> write)
   }
 }

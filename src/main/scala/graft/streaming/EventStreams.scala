@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.F
+import graft.sources.Sources
 
 /** Structured Streaming twins of the batch event queries (SURVEY.md §2.B).
   *
@@ -55,13 +56,14 @@ object EventStreams {
     * standard pattern for keeping a serving table current from a stream.
     *
     * Merge = union + keep-first with batch rows ranked above existing
-    * (one window pass). Snapshot publication goes through a POINTER FILE:
-    * each batch writes a fresh `snapshot_N` directory, then atomically
-    * replaces the `_current` manifest naming the live snapshot
-    * (ATOMIC_MOVE + REPLACE_EXISTING of a one-line file). Readers resolve
-    * via [[readCurrent]], so there is never a moment with no live table,
-    * and a crash mid-publish leaves the previous snapshot live. Local-FS
-    * semantics; on object stores the manifest maps to a conditional-put.
+    * (one window pass). Snapshot publication goes through a POINTER FILE
+    * ([[graft.sources.Sources.publishSnapshot]]): each batch writes a
+    * fresh `snapshot_N` directory, then swaps the `_current` pointer
+    * naming the live snapshot. Readers resolve via [[readCurrent]], so
+    * there is never a moment with no live table, and a crash mid-publish
+    * leaves the previous snapshot live. The swap is one atomic rename on
+    * a local disk and on HDFS; on an object store it is not, and the
+    * pointer maps to a conditional put there.
     *
     * Note: each batch rewrites the FULL table — O(table) per batch. The
     * scale path is [[parquetUpsertSinkBucketed]], which rewrites only the
@@ -71,7 +73,8 @@ object EventStreams {
     import org.apache.spark.sql.functions.{col, lit}
     val spark = batch.sparkSession
     val incoming = batch.withColumn("__src", lit(1))
-    val merged = currentSnapshotDir(outDir) match {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val merged = Sources.currentSnapshotDir(outDir, conf) match {
       case Some(live) =>
         val existing = spark.read.parquet(live).withColumn("__src", lit(0))
         graft.operators.Relational.dedupKeepFirst(
@@ -80,7 +83,7 @@ object EventStreams {
           order = Seq(col("__src").desc))
       case None => incoming
     }
-    stageAndPublish(outDir, batchId) { staged =>
+    Sources.publishSnapshot(outDir, batchId, conf) { staged =>
       merged.drop("__src").write.mode("overwrite").parquet(staged)
     }
   }
@@ -114,7 +117,8 @@ object EventStreams {
         order = valueCols.map(col(_).desc))
       .select(col(keyCol).as("__bk") +: valueCols.map(c => col(c).as(s"__b_$c")) :+
         lit(true).as("__b_hit"): _*)
-    val merged = currentSnapshotDir(outDir) match {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val merged = Sources.currentSnapshotDir(outDir, conf) match {
       case None =>
         incoming.select(
           col("__bk").as(keyCol) +: valueCols.map(c => col(s"__b_$c").as(c)) ++: Seq(
@@ -154,7 +158,7 @@ object EventStreams {
             lit(true).as("is_current")): _*)
         closedHist.unionByName(nowClosed).unionByName(stillOpen).unionByName(opened)
     }
-    stageAndPublish(outDir, batchId) { staged =>
+    Sources.publishSnapshot(outDir, batchId, conf) { staged =>
       merged.write.mode("overwrite").parquet(staged)
     }
   }
@@ -266,65 +270,10 @@ object EventStreams {
         (unix_millis(col("window.end")) / lit(86400000L) - 1L).cast("long").as("day"),
         col("trail_sum"))
 
-  /** Atomically point `_current` at `snapshotName` (write-temp + rename). */
-  /** Deferred snapshot reclamation: delete every `snapshot_*` dir that
-    * is neither the CURRENT snapshot nor in `grace`. The just-retired
-    * dir stays ONE more generation — a reader that resolved `_current`
-    * just before the swap finishes its scan against live files instead
-    * of racing a delete — and crashed-attempt orphans (staged but never
-    * published) are swept on the next successful publish, which is the
-    * cleanup the staging note promises. */
-  private[streaming] def reclaimSnapshots(outDir: String, grace: Set[String]): Unit = {
-    val cur = currentSnapshotDir(outDir)
-      .map(p => java.nio.file.Paths.get(p).getFileName.toString)
-    val root = new java.io.File(outDir)
-    Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("snapshot_"))
-      .filterNot(f => cur.contains(f.getName) || grace.contains(f.getName))
-      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-  }
-
-  /** The shared stage→publish→reclaim trailer of every snapshot sink:
-    * allocate a PER-ATTEMPT staging dir (unique per attempt, not per
-    * batch id — if the process dies after the pointer swap but before
-    * the streaming checkpoint commits, the batch REPLAYS with the same
-    * batchId; a batchId-only name would read and overwrite the live
-    * snapshot in one plan and retire the dir it just published), let
-    * `write` fill it, atomically swap the pointer, and reclaim all but
-    * one retired generation (in-flight readers; crashed staging orphans
-    * go now). */
-  private[streaming] def stageAndPublish(outDir: String, batchId: Long)
-                                        (write: String => Unit): Unit = {
-    val staged = java.nio.file.Paths.get(outDir,
-      s"snapshot_${batchId}_${System.nanoTime()}")
-    write(staged.toString)
-    val retired = currentSnapshotDir(outDir)
-    publishSnapshot(outDir, staged.getFileName.toString)
-    reclaimSnapshots(outDir,
-      grace = retired.map(p => java.nio.file.Paths.get(p).getFileName.toString).toSet)
-  }
-
-  private[streaming] def publishSnapshot(outDir: String, snapshotName: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(outDir, s"_current.tmp")
-    Files.write(tmp, snapshotName.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(outDir, "_current"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** The live snapshot directory named by the `_current` manifest. */
-  def currentSnapshotDir(outDir: String): Option[String] = {
-    import java.nio.file.{Files, Paths}
-    val ptr = Paths.get(outDir, "_current")
-    if (Files.exists(ptr))
-      Some(Paths.get(outDir, new String(Files.readAllBytes(ptr), "UTF-8").trim).toString)
-    else None
-  }
-
   /** Read the live upsert table (resolves the `_current` manifest). */
   def readCurrent(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(currentSnapshotDir(outDir).getOrElse(
-      throw new IllegalStateException(s"no published snapshot under $outDir")))
+    spark.read.parquet(Sources.currentSnapshotDir(outDir, spark.sparkContext.hadoopConfiguration)
+      .getOrElse(throw new IllegalStateException(s"no published snapshot under $outDir")))
 
   /** Bucketed upsert sink — the 100 TB path: the table is hash-partitioned
     * on the key into `nBuckets` directories, and a micro-batch rewrites
@@ -342,8 +291,10 @@ object EventStreams {
     val incoming = batch
       .withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
       .withColumn("__src", lit(1))
-    val exists = java.nio.file.Files.exists(java.nio.file.Paths.get(dir))
-    val merged = if (exists) {
+    // presence through the path's own FileSystem, crash orphans read as
+    // absent: a `file://` table is found, and a `_temporary`-only dir
+    // left by a crashed first write does not wedge schema inference
+    val merged = if (Sources.hasParquetData(dir, spark.sparkContext.hadoopConfiguration)) {
       // touched buckets: bounded by nBuckets (a driver-side list of ints,
       // NOT data-proportional)
       val touched = incoming.select(col("__bucket")).distinct()

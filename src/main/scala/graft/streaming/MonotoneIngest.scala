@@ -12,12 +12,12 @@ import graft.sources.Sources
   *
   *   - Arrival contract: doc ids are monotone across micro-batches
   *     (batches are cut in ascending `doc_id` order).
-  *   - Commit marker: `<outDir>/<MarkerDir>/batch=<id>` holds one row,
-  *     `max_id`, the batch's largest fresh doc id. [[writeFresh]] writes
-  *     it LAST, after the sink's per-batch artifacts, and only when the
-  *     batch has fresh rows. A crash anywhere before it replays the batch
-  *     into identical files: every artifact is a deterministic overwrite
-  *     of its own `batch=<id>` dir.
+  *   - Commit marker: [[graft.sources.Sources.commitBatch]] with the
+  *     batch's largest fresh doc id. [[writeFresh]] commits LAST, after
+  *     the sink's per-batch artifacts, and only when the batch has fresh
+  *     rows. A crash anywhere before it replays the batch into identical
+  *     files: every artifact is a deterministic overwrite of its own
+  *     `batch=<id>` dir.
   *   - Watermark: the max `max_id` over the markers with
   *     `batch < batchId`. A crashed attempt's own marker never counts, so
   *     a re-run of a batch id re-ingests all its rows and rewrites its
@@ -37,20 +37,22 @@ import graft.sources.Sources
   *     publish, whether the next call is a same-id replay or a later
   *     batch with no fresh rows.
   *
-  * State presence goes through [[graft.sources.Sources.hasParquetData]]
-  * (not a bare exists()): a crash-orphaned `_temporary`-only dir must not
-  * wedge every replay on schema inference.
+  * State presence, the markers and the snapshot pointer all go through
+  * [[graft.sources.Sources]]: a crash-orphaned `_temporary`-only dir must
+  * not wedge every replay on schema inference, and a `file://` or
+  * `hdfs://` outDir must find its live snapshot.
   */
 private[streaming] final class MonotoneIngest private (outDir: String, batchId: Long,
                                                        rows: DataFrame) {
   import MonotoneIngest._
 
   private val spark = rows.sparkSession
+  private val conf = spark.sparkContext.hadoopConfiguration
 
   /** Every partition under `<outDir>/<sub>`, or None before the first write. */
   def all(sub: String): Option[DataFrame] = {
     val root = s"$outDir/$sub"
-    if (Sources.hasParquetData(root, spark.sparkContext.hadoopConfiguration))
+    if (Sources.hasParquetData(root, conf))
       Some(spark.read.parquet(root))
     else None
   }
@@ -62,21 +64,23 @@ private[streaming] final class MonotoneIngest private (outDir: String, batchId: 
   /** This batch's own partition dir under `<outDir>/<sub>`. */
   def batchPath(sub: String): String = s"$outDir/$sub/batch=$batchId"
 
-  private val watermark: Option[Long] = priorOnly(MarkerDir).flatMap(maxOf(_, MarkerCol))
+  private val watermark: Option[Long] =
+    Sources.committedBatches(spark, outDir).filter(_.batch < batchId).flatMap(_.maxId).maxOption
 
   // cached: the fresh max and every artifact the sink derives read it
   private val fresh: DataFrame =
     watermark.fold(rows)(m => rows.filter(col("doc_id") > m)).cache()
 
-  private lazy val freshMax: Option[Long] = maxOf(fresh, "doc_id")
+  private lazy val freshMax: Option[Long] = {
+    val r = fresh.agg(max(col("doc_id"))).head()
+    if (r.isNullAt(0)) None else Some(r.getLong(0))
+  }
 
   /** Run the sink's per-batch artifact writes over the fresh rows, then
     * commit the batch; a batch without fresh rows writes nothing. */
   def writeFresh(artifacts: DataFrame => Unit): Unit = freshMax.foreach { m =>
     artifacts(fresh)
-    import spark.implicits._
-    Seq(m).toDF(MarkerCol).coalesce(1)
-      .write.mode("overwrite").parquet(batchPath(MarkerDir))
+    Sources.commitBatch(spark, outDir, batchId, Some(m))
   }
 
   /** Publish a new snapshot when the live one does not cover every
@@ -86,11 +90,11 @@ private[streaming] final class MonotoneIngest private (outDir: String, batchId: 
   def republishIfBehind(write: (Option[Snapshot], String) => Unit): Unit = {
     val horizon = (watermark ++ freshMax).reduceOption(_ max _)
     horizon.foreach { h =>
-      val live = EventStreams.currentSnapshotDir(outDir).map { dir =>
+      val live = Sources.currentSnapshotDir(outDir, conf).map { dir =>
         Snapshot(dir, spark.read.parquet(s"$dir/meta").head().getLong(0))
       }
       if (!live.exists(_.coverage == h))
-        EventStreams.stageAndPublish(outDir, batchId) { staged =>
+        Sources.publishSnapshot(outDir, batchId, conf) { staged =>
           write(live, staged)
           import spark.implicits._
           Seq(h).toDF("coverage_max_id").coalesce(1)
@@ -102,10 +106,6 @@ private[streaming] final class MonotoneIngest private (outDir: String, batchId: 
 
 private[streaming] object MonotoneIngest {
 
-  /** Commit-marker root under a sink's dir, and its one column. */
-  val MarkerDir = "docmax"
-  val MarkerCol = "max_id"
-
   /** A live snapshot dir and the largest doc id it covers. */
   final case class Snapshot(dir: String, coverage: Long)
 
@@ -115,10 +115,5 @@ private[streaming] object MonotoneIngest {
            (body: MonotoneIngest => Unit): Unit = {
     val ingest = new MonotoneIngest(outDir, batchId, rows)
     try body(ingest) finally ingest.fresh.unpersist()
-  }
-
-  private def maxOf(df: DataFrame, column: String): Option[Long] = {
-    val r = df.agg(max(col(column))).head()
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
   }
 }

@@ -30,9 +30,7 @@ object DumpPlans {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = GraftSession.builder(Some(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val executions = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     spark.listenerManager.register(new QueryExecutionListener {

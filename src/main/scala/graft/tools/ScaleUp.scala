@@ -26,8 +26,6 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "target/sf1"
     val n = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
 
     // The replica must track its source: the driver has regenerated the
     // test data mid-round before, and a silently-stale sf1 would anchor
@@ -53,7 +51,7 @@ object ScaleUp {
       return
     }
 
-    val spark: SparkSession = GraftSession.builder(Some(s"local[$cpus]"), cpus).getOrCreate()
+    val spark: SparkSession = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")

@@ -384,4 +384,17 @@ class SimilaritySpec extends SpecBase {
         emb.select($"vec_id"))
     }.getMessage.contains("not a saved ANN artifact"))
   }
+
+  test("deleteFromIndex refuses a dir whose centroids/ holds only crash orphans") {
+    // a save that crashed mid-centroids leaves only write orphans there:
+    // tombstones written beside it would mask ids of whatever is rebuilt
+    val dir = java.nio.file.Files.createTempDirectory("ivf_crashed").toString
+    val orphan = new java.io.File(s"$dir/centroids/_temporary/0")
+    assert(orphan.mkdirs())
+    java.nio.file.Files.write(orphan.toPath.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
+    assert(intercept[IllegalArgumentException] {
+      Similarity.deleteFromIndex(spark, dir, emb.select($"vec_id"))
+    }.getMessage.contains("not a saved ANN artifact"))
+    assert(!new java.io.File(s"$dir/tombstones").exists())
+  }
 }

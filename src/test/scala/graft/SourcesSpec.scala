@@ -47,6 +47,10 @@ class SourcesSpec extends SpecBase {
     val df = Tables.nation(spark, SfDir)
     Sources.writeParquet(df, s"$root/real", partitionCols = Seq("n_regionkey"))
     assert(Sources.hasParquetData(s"$root/real", conf))
+    // ... also under a partition column whose name starts with `_`
+    Sources.writeParquet(df.withColumn("__bucket", col("n_regionkey") % 2), s"$root/under",
+      partitionCols = Seq("__bucket"))
+    assert(Sources.hasParquetData(s"$root/under", conf))
   }
 
   test("recoverStagedDir promotes only the marker-complete delete-then-crash orphan") {
@@ -91,6 +95,52 @@ class SourcesSpec extends SpecBase {
     assert(!new java.io.File(s"$target/part-9.parquet").exists(),
       "the stale partial staging content must not survive the swap")
     assert(!new java.io.File(s"$target/_GRAFT_STAGED_COMPLETE").exists())
+  }
+
+  test("publishSnapshot swaps the pointer in one rename and keeps one retired generation") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val local = Files.createTempDirectory("graft_snap")
+    val dir = "file://" + local.toString
+    assert(Sources.currentSnapshotDir(dir, conf).isEmpty)
+    val live = (1 to 3).map { n =>
+      Sources.publishSnapshot(dir, n.toLong, conf)(spark.range(n).write.parquet(_))
+      Sources.currentSnapshotDir(dir, conf).get
+    }
+    assert(spark.read.parquet(live.last).count() == 3)
+    val names = local.toFile.list().toSet
+    assert(names.filter(_.startsWith("snapshot_")) ==
+      live.takeRight(2).map(new org.apache.hadoop.fs.Path(_).getName).toSet,
+      s"the live and the just-retired snapshot must survive, no older one: $names")
+    // no `_current.tmp` left over, and no `.crc` sidecar: a checksummed
+    // pointer would swap in a second rename after the first
+    assert(names.filter(_.contains("_current")) == Set("_current"), names)
+  }
+
+  test("filesystem calls and the commit-marker name live in Sources alone") {
+    import scala.jdk.CollectionConverters._
+    def scalaFiles(dir: String): List[java.nio.file.Path] = scala.util.Using.resource(
+        Files.walk(java.nio.file.Paths.get(dir))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    def hits(files: Seq[java.nio.file.Path], pattern: scala.util.matching.Regex) = for {
+      f <- files
+      text = Files.readString(f)
+      m <- pattern.findAllMatchIn(text)
+    } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+    // durable state (presence, markers, folds, fresh destinations,
+    // pointers) is answered through Sources, on the path's own Hadoop
+    // FileSystem; a local-disk or raw FileSystem call in these packages
+    // is a second copy of it
+    val guarded = Seq("operators", "pipelines", "queries", "streaming")
+      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d"))
+    assert(guarded.size > 40, "the guard must see the sources")
+    val fsCalls = hits(guarded,
+      "java\\.nio\\.file|java\\.io\\.File|org\\.apache\\.commons\\.io|org\\.apache\\.hadoop\\.fs".r)
+    assert(fsCalls.isEmpty, s"filesystem calls outside Sources:\n${fsCalls.mkString("\n")}")
+    // one commit-marker format: its dir is named in Sources only
+    val marker = hits(scalaFiles("src/main/scala"), "docmax".r)
+    assert(marker.nonEmpty && marker.forall(_.contains("/sources/Sources.scala:")),
+      s"the commit-marker dir must be named in Sources alone:\n${marker.mkString("\n")}")
   }
 
   test("csv round-trip and json-lines round-trip") {
