@@ -188,7 +188,6 @@ object Retrieval {
     * double-count itself (lesson 48). */
   def compactBm25Index(spark: SparkSession, srcDir: String, dstDir: String): Unit = {
     val nBuckets = requireArtifact(spark, srcDir)
-    Sources.requireFreshDestination(dstDir, spark.sparkContext.hadoopConfiguration)
     Sources.foldCommitted(spark, srcDir, dstDir)(
       ("postings", (rows, path) => rows.repartition(col("bucket"))
         .write.partitionBy("bucket").parquet(path)),

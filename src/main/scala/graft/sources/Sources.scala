@@ -176,7 +176,8 @@ object Sources {
   }
 
   /** Fold the committed batches of `srcDir`'s per-batch `zones` into one
-    * `batch=-1` sentinel partition under `dstDir`, then commit the
+    * `batch=-1` sentinel partition under a FRESH `dstDir`
+    * ([[requireFreshDestination]]), then commit the
     * sentinel with the largest `max_id` folded. −1 sorts below every real
     * batch id, so the folded rows stay visible to every later
     * `batch < id` read — including batch 0 of a stream restarted with a
@@ -185,10 +186,10 @@ object Sources {
     * replay after the swap would read them as prior state and
     * double-count itself. Each zone's `write(rows, path)` writes its
     * committed rows (the `batch` column dropped) to the sentinel dir; a
-    * zone with no data is skipped. The caller checks `dstDir` with
-    * [[requireFreshDestination]] first and pointer-swaps after. */
+    * zone with no data is skipped. The caller pointer-swaps after. */
   def foldCommitted(spark: SparkSession, srcDir: String, dstDir: String)
                    (zones: (String, (DataFrame, String) => Unit)*): Unit = {
+    requireFreshDestination(dstDir, spark.sparkContext.hadoopConfiguration)
     val committed = committedBatches(spark, srcDir)
     require(committed.nonEmpty, s"$srcDir has no committed batch — nothing to compact")
     val ids = committed.map(_.batch)

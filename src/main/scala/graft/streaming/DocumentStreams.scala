@@ -393,10 +393,8 @@ object DocumentStreams {
     * source that is not a passage store. */
   def compactPassageStore(spark: org.apache.spark.sql.SparkSession,
                           srcDir: String, dstDir: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(Sources.hasParquetData(s"$srcDir/hashes", hconf),
+    require(Sources.hasParquetData(s"$srcDir/hashes", spark.sparkContext.hadoopConfiguration),
       s"$srcDir is not a passage-dedup store (no hashes/ parquet)")
-    Sources.requireFreshDestination(dstDir, hconf)
     val write: (DataFrame, String) => Unit = (rows, path) => rows.write.parquet(path)
     Sources.foldCommitted(spark, srcDir, dstDir)("hashes" -> write, "reports" -> write)
   }
